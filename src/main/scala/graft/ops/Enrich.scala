@@ -16,25 +16,33 @@ import graft.functions.Normalize
   */
 object Enrich {
 
-  import org.apache.spark.sql.types.{StringType, StructType}
+  import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+
+  /** The storeInfo fields enrichment reads or writes. */
+  private val StoreInfoFields: Seq[StructField] = {
+    val descT = DataType.fromDDL(
+      "struct<LineID:string,PrimaryDescription:string,SecondayDescription:string>")
+    Seq("Manager", "Phone", "Location", "Postal").map(StructField(_, StringType)) ++
+      Seq("firstDescription", "secondDescription").map(StructField(_, descT))
+  }
+
+  private def nullStruct(fields: Seq[StructField]): Column =
+    struct(fields.map(f => lit(null).cast(f.dataType).as(f.name)): _*)
 
   /** `ensure_printer_info`-style on-demand struct creation
     * (core/printers.py:19-24 analogue for storeInfo): withField on a
     * NULL struct returns null, so enrichment coalesces to an all-null
-    * struct of the document's storeInfo schema first. */
+    * struct of the document's storeInfo schema first. JSON inference
+    * only types the fields some record carries, so a storeInfo missing
+    * any of [[StoreInfoFields]] is widened with null fields — reading
+    * an absent field would fail analysis (FIELD_NOT_FOUND). */
   private def siBase(df: DataFrame): Column =
     df.schema.fields.find(_.name == "storeInfo").map(_.dataType) match {
       case Some(t: StructType) =>
-        coalesce(col("storeInfo"),
-          struct(t.fields.toSeq.map(f => lit(null).cast(f.dataType).as(f.name)): _*))
-      case _ =>
-        val descT = "struct<LineID:string,PrimaryDescription:string,SecondayDescription:string>"
-        struct(lit(null).cast(StringType).as("Manager"),
-          lit(null).cast(StringType).as("Phone"),
-          lit(null).cast(StringType).as("Location"),
-          lit(null).cast(StringType).as("Postal"),
-          lit(null).cast(descT).as("firstDescription"),
-          lit(null).cast(descT).as("secondDescription"))
+        val base = coalesce(col("storeInfo"), nullStruct(t.fields.toSeq))
+        StoreInfoFields.filterNot(f => t.fieldNames.contains(f.name))
+          .foldLeft(base)((si, f) => si.withField(f.name, lit(null).cast(f.dataType)))
+      case _ => nullStruct(StoreInfoFields)
     }
 
   /** J1 — employees → branches (core/enrich/employees.py:4-34):

@@ -65,7 +65,7 @@ object FleetSnapshot {
       .otherwise(lit(null).cast("string"))
   }
 
-  /** Printers (DocumentIngest.printersUnified shape) → flat snapshot.
+  /** Printers (DocumentIngest.printers shape) → flat snapshot.
     * `keep` columns ride along in the same projection (e.g. storeInfo
     * fields a caller wants in the sheet) — a pass-through, never a
     * join. */

@@ -47,19 +47,6 @@ object Pipeline {
   implicit private val keyOrdering: Ordering[Seq[(Int, String, Long)]] =
     Ordering.Implicits.seqOrdering
 
-  /** Order stages: step groups keep given order; substeps natural-sorted
-    * within each group (core/pipeline.py:29-35). */
-  def plan(groups: Seq[(String, Seq[Stage])]): Seq[Stage] =
-    groups.flatMap { case (_, stages) => stages.sortBy(s => naturalKey(s.substep)) }
-
-  /** Name-addressed pruning convenience (this engine's stages are named,
-    * not numbered): "step" drops a whole group, "step:substep" one
-    * script. For the reference's actual numeric `--exclude` grammar see
-    * [[parseExcludes]] / [[numberedPlan]] / [[pruneNumbered]]. */
-  def prune(stages: Seq[Stage], excludes: Set[String]): Seq[Stage] =
-    stages.filterNot(s =>
-      excludes.contains(s.step) || excludes.contains(s"${s.step}:${s.substep}"))
-
   /** The reference's `--exclude` grammar, faithfully (core/pipeline.py:
     * 38-64 + cli/command.py:20-24): the repeatable flag's values are
     * comma-flattened with trim (empties dropped); `\d+` excludes a

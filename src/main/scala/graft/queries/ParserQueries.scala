@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.plans.GraftExtensions
-import graft.sources.{EwsAlerts, PayloadParsers, SnmpPayload}
+import graft.sources.{DeterministicSnmpFake, DevicePoll, EwsAlerts, PayloadParsers,
+  SnmpPayload}
 
 /** End-to-end oracles for the custom extractor components (the parts of
   * the engine DuckDB cannot run directly): each query SYNTHESIZES a
@@ -519,12 +520,14 @@ object ParserQueries {
       .orderBy("doc_id", "ord")
   }
 
-  /** S5 via DSv2 — the full custom-source path under the driver hash
-    * gate: 25 devices in the option list, an `In(ip, ...)` predicate
-    * that [[graft.sources.DevicePollScanBuilder]] pushes into the scan
-    * (only 3 devices polled — DevicePollSourceSpec pins the poll
-    * count), and the DeterministicSnmpFake's supplies walk re-derived
-    * in the oracle. The fake keys every row off Java
+  /** S5 — the device fan-out under the driver hash gate: a 25-device
+    * frame narrowed to three `isin` IPs BEFORE [[DevicePoll.walk]] (the
+    * manual pre-filter `DocumentIngest.withValidIp` applies on the
+    * fleet path — the walk is opaque to Catalyst, so only the 3 kept
+    * devices are polled; PlanContractSpec pins the IP set), and the
+    * DeterministicSnmpFake's supplies walk re-derived in the oracle.
+    * The key keeps its `dsv2` name so its oracle entry is unchanged.
+    * The fake keys every row off Java
     * `ip.hashCode` — reproduced in SQL as the 31-polynomial over the
     * fixed 3-digit suffix with 32-bit signed wrap (prefix hash inlined
     * as a constant computed from the same string). */
@@ -574,14 +577,11 @@ object ParserQueries {
          |    CAST((habs // rn) % 111 - 5 AS VARCHAR) FROM carts
          |)
          |ORDER BY ip, oid, value""".stripMargin) { (s, d) =>
-      val devices = (0 until 25).map(i => s"10.0.0.${100 + i}").mkString(",")
-      s.read.format("graft.sources.DevicePollSource")
-        .option("devices", devices)
-        .option("baseOid", SnmpPayload.SuppliesBase)
-        .option("numPartitions", "4")
-        .option("failEvery", "0")
-        .load()
+      val devices = s.range(25)
+        .select(concat(lit("10.0.0."), (col("id") + 100).cast("string")).as("ip"))
         .where(col("ip").isin("10.0.0.101", "10.0.0.105", "10.0.0.110"))
+      DevicePoll.walk(s, devices, SnmpPayload.SuppliesBase,
+        new DeterministicSnmpFake(failEvery = 0), parallelism = 4)
         .orderBy("ip", "oid", "value")
     }
   }

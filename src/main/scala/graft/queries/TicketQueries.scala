@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.tickets.{DrumOrder, PrinterTechnician, TicketSearch, TonerOrder}
+import graft.tickets.{DrumOrder, PrinterTechnician, Ticket, TicketItem,
+  TicketPlugin, TicketSearch, TonerOrder}
 
 /** Driver oracles for the ticket lookup/projection pair (SURVEY.md §2.3
   * P7/P8) — the last reference operators that were spec-verified only.
@@ -196,8 +197,44 @@ object TicketQueries {
       .orderBy("pid")
   }
 
+  /** One synthesized ticket: the [[Ticket]] fields, parallel item
+    * arrays (`labels`/`qtys`) and the tech template's `notes`/`toAddr`. */
+  private[queries] final case class TicketFields(pid: Long, customer: String,
+      branchId: String, serial: String, model: String, address: String,
+      contact: String, phone: String, group: String, labels: Seq[String],
+      qtys: Seq[Int], notes: String, toAddr: String)
+
+  /** a9/a9b/a9c render: one ticket per customer row, synthesized from the
+    * given columns and rendered by the plugin's own `subject`/`html` —
+    * the renderer the helpdesk lookup path calls — in a typed map (no
+    * UDF, nothing collected). Output `(pid, subject, html)` by pid. */
+  private def render(s: SparkSession, d: String, plugin: TicketPlugin)(
+      customer: Column, branchId: Column, serial: Column, model: Column,
+      address: Column, contact: Column, phone: Column, group: Column,
+      labels: Column = array().cast("array<string>"),
+      qtys: Column = array().cast("array<int>"),
+      notes: Column = lit(null).cast("string"),
+      toAddr: Column = lit(null).cast("string")): DataFrame = {
+    import s.implicits._
+    Tables.customer(s, d)
+      .select(col("c_custkey").as("pid"), customer.as("customer"),
+        branchId.as("branchId"), serial.as("serial"), model.as("model"),
+        address.as("address"), contact.as("contact"), phone.as("phone"),
+        group.as("group"), labels.as("labels"), qtys.as("qtys"),
+        notes.as("notes"), toAddr.as("toAddr"))
+      .as[TicketFields]
+      .map { f =>
+        val t = Ticket(f.customer, f.branchId, f.serial, f.model, f.address,
+          f.contact, f.phone, f.group, Nil)
+        val items = f.labels.zip(f.qtys).map { case (l, q) => TicketItem(l, q) }
+        (f.pid, plugin.subject(t), plugin.html(t, items, f.notes, f.toAddr))
+      }
+      .toDF("pid", "subject", "html")
+      .orderBy("pid")
+  }
+
   /** A9 + F28 (real template) — subject + full RTL HTML render through
-    * the column-level TonerOrder renderer (make_subject TonerOrder.py:
+    * [[render]] with `TonerOrder` (make_subject TonerOrder.py:
     * 152-160, make_html :162-195). The DuckDB twin interpolates the
     * SAME template constants from the plugin object (drift-proof) and
     * hand-derives the escaped fields, the single-vs-multi color string,
@@ -271,16 +308,12 @@ object TicketQueries {
       val qtys = when(k % 3 === 0, array((k % 5 + 1).cast("int")))
         .when(k % 3 === 1, array((k % 4 + 1).cast("int"), lit(2), lit(1)))
         .otherwise(array().cast("array<int>"))
-      Tables.customer(s, d).select(
-        k.as("pid"),
-        TonerOrder.subjectCol(customer, model, group, branchId).as("subject"),
-        TonerOrder.htmlCol(customer, serial, model, address, lit("Mgr"),
-          phone, labels, qtys).as("html"))
-        .orderBy("pid")
+      render(s, d, TonerOrder)(customer, branchId, serial, model, address,
+        lit("Mgr"), phone, group, labels, qtys)
     }
   }
 
-  /** A9b — Drum ticket render through the column-level DrumOrder twin
+  /** A9b — Drum ticket render through [[render]] with `DrumOrder`
     * (make_subject DrumOrder.py:76-84, make_html :86-132). Beyond a9's
     * shapes this one hash-gates the two branches a9's synthesis never
     * reaches: a NULL group (k%4==2) — Python's fields.get("group","")
@@ -357,17 +390,13 @@ object TicketQueries {
         .otherwise(array().cast("array<string>"))
       val qtys = when(k % 2 === 0, array((k % 5 + 1).cast("int")))
         .otherwise(array().cast("array<int>"))
-      Tables.customer(s, d).select(
-        k.as("pid"),
-        DrumOrder.subjectCol(customer, model, group, branchId).as("subject"),
-        DrumOrder.htmlCol(customer, serial, model, address, contact,
-          phone, labels, qtys).as("html"))
-        .orderBy("pid")
+      render(s, d, DrumOrder)(customer, branchId, serial, model, address,
+        contact, phone, group, labels, qtys)
     }
   }
 
-  /** A9c — Technician ticket render through the column-level
-    * PrinterTechnician twin (make_subject PrinterTechnician.py:73-81,
+  /** A9c — Technician ticket render through [[render]] with
+    * `PrinterTechnician` (make_subject PrinterTechnician.py:73-81,
     * make_html :83-120): no items; a pre-wrap remarks row whose notes
     * carry a newline plus & and double-quote escapes, and a recipient
     * row where a NULL to_addr renders '' (Python `to_addr or ""`).
@@ -433,13 +462,8 @@ object TicketQueries {
         (k % 7).cast("string"))
       val toAddr = when(k % 2 === 0, lit("sysmoked@one1.co.il"))
         .otherwise(lit(null).cast("string"))
-      Tables.customer(s, d).select(
-        k.as("pid"),
-        PrinterTechnician.subjectCol(customer, model, group, branchId)
-          .as("subject"),
-        PrinterTechnician.htmlCol(customer, serial, model, address, contact,
-          phone, notes, toAddr).as("html"))
-        .orderBy("pid")
+      render(s, d, PrinterTechnician)(customer, branchId, serial, model,
+        address, contact, phone, group, notes = notes, toAddr = toAddr)
     }
   }
 

@@ -21,9 +21,11 @@ import org.apache.spark.sql.types._
   *    cannot push predicates through the opaque partition function);
   *  - `parallelism` bounds concurrent network clients, independent of
   *    the table's upstream partitioning;
-  *  - a real deployment would promote this to a DataSourceV2
-  *    `TableProvider` with `SupportsPushDownFilters`; the relational
-  *    semantics downstream (SnmpPayload) are identical either way.
+  *  - this is the only poll path: callers narrow the device frame
+  *    before the fan-out (`DocumentIngest.withValidIp`, `isin` lists),
+  *    so a pushdown-capable source would add a second implementation
+  *    of dedup, fan-out and failure handling without polling fewer
+  *    devices.
   *
   * Network clients are out of scope (zero-egress build): `DeviceClient`
   * is the seam, and `DeterministicSnmpFake` produces stable

@@ -81,11 +81,6 @@ object DocumentIngest {
       .otherwise(array(c))
   }
 
-  /** Alias kept for call sites that want to be explicit that the
-    * dual-typed `tonerType` has been unified — `printers` already
-    * harmonizes each group frame before the union. */
-  def printersUnified(doc: DataFrame): DataFrame = printers(doc)
-
   /** Write-back: reassemble the printer stream into the single-document
     * shape and atomically replace the store (adapters/printers_store.py:
     * 38-42 writes tmp-then-rename; here: write to a tmp file, then

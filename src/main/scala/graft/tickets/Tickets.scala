@@ -129,8 +129,9 @@ object TicketSearch {
     r.getSeq[String](r.fieldIndex("colors")).toSeq)
 }
 
-/** One ticket family: subject + HTML (F28). */
-trait TicketPlugin {
+/** One ticket family: subject + HTML (F28). Serializable so a plugin
+  * can render inside a Spark task (TicketQueries' typed map). */
+trait TicketPlugin extends Serializable {
   def name: String
 
   /** The plugin's fixed subject base string. */
@@ -154,42 +155,6 @@ trait TicketPlugin {
   protected def esc(s: String): String =
     Option(s).getOrElse("").replace("&", "&amp;").replace("<", "&lt;")
       .replace(">", "&gt;").replace("\"", "&quot;").replace("'", "&#x27;")
-
-  /** Column-level twin of [[subject]] (make_subject, TonerOrder.py:
-    * 152-160): same truthy-part filter (`if p` — null AND "" drop) and
-    * branch-id suffix rule, as a codegen'd expression so a whole fleet
-    * renders in one narrow projection (no per-row driver loop). */
-  def subjectCol(customer: Column, model: Column, group: Column,
-      branchId: Column): Column = {
-    val parts = filter(array(customer, model), p => p.isNotNull && p =!= "")
-    val s = when(size(parts) > 0,
-      concat(lit(s"$subjectBase - "), array_join(parts, " | ")))
-      .otherwise(lit(subjectBase))
-    val bid = regexp_replace(coalesce(branchId.cast("string"), lit("")),
-      "^\\s+|\\s+$", "")
-    // Null group must still take the suffix: Python's
-    // fields.get("group","") != "Company_Grouped" is true for a missing
-    // group, but a bare `group =!= lit` is null-for-null and would
-    // silently suppress it — coalesce to "" like the reference default.
-    when(coalesce(group.cast("string"), lit("")) =!= "Company_Grouped" &&
-        bid =!= "",
-      concat(s, lit(" ["), bid, lit("]"))).otherwise(s)
-  }
-
-  /** Column-level twin of [[esc]] — same replacement order. */
-  protected def escCol(c: Column): Column =
-    Seq("&" -> "&amp;", "<" -> "&lt;", ">" -> "&gt;",
-      "\"" -> "&quot;", "'" -> "&#x27;")
-      .foldLeft(coalesce(c, lit(""))) { case (acc, (from, to)) =>
-        replace(acc, lit(from), lit(to))
-      }
-
-  /** One rendered label/value row, sharing [[row]]'s literal skeleton. */
-  protected def rowColPiece(tdLabel: String, label: String, value: Column,
-      valueStyleSuffix: String = ""): Column =
-    concat(
-      lit(s"""<tr><td style="$tdLabel">$label</td><td style="$tdValue$valueStyleSuffix">"""),
-      value, lit("</td></tr>"))
 
   // Shared inline styles (verbatim template constants in all three
   // reference plugins; tech narrows the label/table widths).
@@ -216,7 +181,7 @@ trait TicketPlugin {
   /** Fixed template pieces for DuckDB-oracle interpolation: hash parity
     * is bit-exact only when the twin SQL carries the SAME literal
     * skeleton, so the oracle builder reads these from here, never
-    * retypes. Also the shared opening of both render paths. */
+    * retypes. Also the opening of every [[html]] render. */
   private[graft] def oracleOpen: String =
     tableOpen(tableStyle) +
       s"""<tr><th colspan="2" style="$thStyle">$htmlTitle</th></tr>"""
@@ -259,35 +224,6 @@ object TonerOrder extends OrderPlugin {
       row(tdLabel, "מספר טלפון נייד", esc(t.phone)) +
       "</table></div>"
   }
-
-  /** Column-level twin of [[html]]: the SAME template constants (shared
-    * vals — drift between the two renderers is impossible) with the
-    * single-vs-multi color string and the A9 qty total computed via
-    * array HOFs, all inside whole-stage codegen. `labels`/`qtys` are
-    * parallel arrays (one element per ticket item). */
-  def htmlCol(customer: Column, serial: Column, model: Column,
-      address: Column, contact: Column, phone: Column,
-      labels: Column, qtys: Column): Column = {
-    val single = size(labels) === 1
-    val colorStr = when(single, escCol(get(labels, lit(0))))
-      .otherwise(array_join(zip_with(labels, qtys,
-        (l, q) => concat(escCol(l), lit(" × "), q.cast("string"))), ", "))
-    // A9 — len==1 takes the bare qty; otherwise Σ qty (empty → 0),
-    // mirroring qtyTotal / TonerOrder.py:170-175.
-    val total = when(single, get(qtys, lit(0)))
-      .otherwise(aggregate(qtys, lit(0), (a, x) => a + x))
-    concat(
-      lit(oracleOpen),
-      rowColPiece(tdLabel, "שם הלקוח", escCol(customer)),
-      rowColPiece(tdLabel, "מספר סידורי", escCol(serial)),
-      rowColPiece(tdLabel, "דגם המכשיר", escCol(model)),
-      rowColPiece(tdLabel, "צבע טונר", colorStr),
-      rowColPiece(tdLabel, "כמות טונרים", total.cast("string")),
-      rowColPiece(tdLabel, "כתובת מלאה לאספקת המשלוח", escCol(address), wrapStyle),
-      rowColPiece(tdLabel, "שם איש קשר", escCol(contact)),
-      rowColPiece(tdLabel, "מספר טלפון נייד", escCol(phone)),
-      lit("</table></div>"))
-  }
 }
 
 object DrumOrder extends OrderPlugin {
@@ -310,30 +246,6 @@ object DrumOrder extends OrderPlugin {
       row(tdLabel, "שם איש קשר", esc(t.contact)) +
       row(tdLabel, "מספר טלפון נייד", esc(t.phone)) +
       "</table></div>"
-  }
-
-  /** Column-level twin of [[html]] (DrumOrder.py:99-132), the a9
-    * pattern: SAME shared template constants, drum's first-item-only
-    * semantics — `if items:` takes items[0]'s type/qty, else ("", 0) —
-    * expressed over parallel `labels`/`qtys` arrays so a whole fleet
-    * renders in one codegen'd projection. */
-  def htmlCol(customer: Column, serial: Column, model: Column,
-      address: Column, contact: Column, phone: Column,
-      labels: Column, qtys: Column): Column = {
-    val hasItems = size(labels) > 0
-    val typeStr = when(hasItems, escCol(get(labels, lit(0)))).otherwise(lit(""))
-    val total = when(hasItems, get(qtys, lit(0))).otherwise(lit(0))
-    concat(
-      lit(oracleOpen),
-      rowColPiece(tdLabel, "שם הלקוח", escCol(customer)),
-      rowColPiece(tdLabel, "מספר סידורי", escCol(serial)),
-      rowColPiece(tdLabel, "דגם המכשיר", escCol(model)),
-      rowColPiece(tdLabel, "סוג דרם", typeStr),
-      rowColPiece(tdLabel, "כמות דרמים", total.cast("string")),
-      rowColPiece(tdLabel, "כתובת מלאה לאספקת המשלוח", escCol(address), wrapStyle),
-      rowColPiece(tdLabel, "שם איש קשר", escCol(contact)),
-      rowColPiece(tdLabel, "מספר טלפון נייד", escCol(phone)),
-      lit("</table></div>"))
   }
 }
 
@@ -359,24 +271,6 @@ object PrinterTechnician extends TicketPlugin {
       row(tdLabel, "הערות", esc(notes), wrapStyle) +
       row(tdLabel, "נמען", esc(toAddr)) +
       "</table></div>"
-
-  /** Column-level twin of [[html]] (PrinterTechnician.py:92-120): no
-    * items — remarks (pre-wrap) + recipient rows; Python's
-    * `to_addr or ""` null-swallow is escCol's coalesce. */
-  def htmlCol(customer: Column, serial: Column, model: Column,
-      address: Column, contact: Column, phone: Column,
-      notes: Column, toAddr: Column): Column =
-    concat(
-      lit(oracleOpen),
-      rowColPiece(tdLabel, "שם הלקוח", escCol(customer)),
-      rowColPiece(tdLabel, "מספר סידורי", escCol(serial)),
-      rowColPiece(tdLabel, "דגם המכשיר", escCol(model)),
-      rowColPiece(tdLabel, "כתובת", escCol(address)),
-      rowColPiece(tdLabel, "איש קשר", escCol(contact)),
-      rowColPiece(tdLabel, "טלפון", escCol(phone)),
-      rowColPiece(tdLabel, "הערות", escCol(notes), wrapStyle),
-      rowColPiece(tdLabel, "נמען", escCol(toAddr)),
-      lit("</table></div>"))
 }
 
 object TicketPlugins {

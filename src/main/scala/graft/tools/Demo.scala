@@ -27,7 +27,7 @@ object Demo {
       tmp.toString
     }
 
-    val printers = DocumentIngest.printersUnified(
+    val printers = DocumentIngest.printers(
       DocumentIngest.readDocument(spark, docPath))
 
     // device scan: filter BEFORE the fan-out (manual pushdown), poll,

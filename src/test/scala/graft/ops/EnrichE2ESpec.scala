@@ -13,7 +13,7 @@ import graft.sources.{DocumentIngest, SideTables}
 class EnrichE2ESpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val printers = DocumentIngest.printersUnified(
+  private lazy val printers = DocumentIngest.printers(
     DocumentIngest.readDocument(spark,
       getClass.getResource("/printers.json").getPath))
 
@@ -66,6 +66,25 @@ class EnrichE2ESpec extends SparkSpec {
     val second = b105.getStruct(3)
     assert(second.getAs[String]("PrimaryDescription") == "טלפוניה") // rank 2; rank 3 dropped
     assert(second.getAs[String]("LineID") == "88001")
+  }
+
+  test("J1+J2: a storeInfo inferred with only Manager/Phone is widened, not FIELD_NOT_FOUND") {
+    val doc = java.nio.file.Files.createTempFile("partial_si", ".json")
+    doc.toFile.deleteOnExit()
+    java.nio.file.Files.write(doc, ("""{"Branches_Grouped": [{"ID": 105,""" +
+      """ "Printer IP": "10.5.0.12", "storeInfo": {"Manager": "old", "Phone": "050"}}]}""")
+      .getBytes("UTF-8"))
+    val partial = DocumentIngest.printers(DocumentIngest.readDocument(spark, doc.toString))
+    val out = Enrich.locations(Enrich.employees(partial, employees), locations)
+    val si = out.select("storeInfo.*").collect().head
+    assert(si.getAs[String]("Manager") == "רות כהן")
+    assert(si.getAs[String]("Phone") == "0530000001")
+    assert(si.getAs[String]("Location") == "אלנבי 9, תל אביב")
+    assert(si.getAs[String]("Postal") == "6100002")
+    assert(si.getAs[org.apache.spark.sql.Row]("firstDescription")
+      .getAs[String]("PrimaryDescription") == "אינטרנט")
+    assert(si.getAs[org.apache.spark.sql.Row]("secondDescription")
+      .getAs[String]("PrimaryDescription") == "טלפוניה")
   }
 
   test("e2e: ingest → enrich → snapshot → upsert through the stage runner") {

@@ -8,7 +8,7 @@ import graft.sources.DocumentIngest
 class ScanMergeSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val printers = DocumentIngest.printersUnified(
+  private lazy val printers = DocumentIngest.printers(
     DocumentIngest.readDocument(spark,
       getClass.getResource("/printers.json").getPath))
 

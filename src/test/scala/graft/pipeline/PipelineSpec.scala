@@ -17,22 +17,6 @@ class PipelineSpec extends SparkSpec {
     assert(sorted == Seq("alpha", "step2", "step2b", "step10"))
   }
 
-  test("plan: groups keep order, substeps natural-sorted") {
-    val stages = Pipeline.plan(Seq(
-      "g2" -> Seq(Stage("g2", "s10", identity), Stage("g2", "s9", identity)),
-      "g1" -> Seq(Stage("g1", "x", identity))))
-    assert(stages.map(s => s"${s.step}:${s.substep}") ==
-      Seq("g2:s9", "g2:s10", "g1:x"))
-  }
-
-  test("prune: excludes whole step or step:substep") {
-    val stages = Seq(Stage("a", "1", identity), Stage("a", "2", identity),
-      Stage("b", "1", identity))
-    assert(Pipeline.prune(stages, Set("a")).map(_.step) == Seq("b"))
-    assert(Pipeline.prune(stages, Set("a:1")).map(s => s"${s.step}:${s.substep}")
-      == Seq("a:2", "b:1"))
-  }
-
   test("parseExcludes: comma-flatten, numeric grammar, invalid collected") {
     val (steps, subs, invalid) = Pipeline.parseExcludes(
       Seq("2, 3.1", "4", " ", "x", "3.1.2", "5.02"))

@@ -13,13 +13,13 @@ class DocumentRoundTripSpec extends SparkSpec {
   private lazy val docPath = getClass.getResource("/printers.json").getPath
 
   test("write-back round-trip: read → write → re-read is stable") {
-    val printers = DocumentIngest.printersUnified(
+    val printers = DocumentIngest.printers(
       DocumentIngest.readDocument(spark, docPath))
     val out = Files.createTempDirectory("graft-doc")
       .resolve("printers.json").toString
     DocumentIngest.writeDocument(printers, out)
 
-    val again = DocumentIngest.printersUnified(
+    val again = DocumentIngest.printers(
       DocumentIngest.readDocument(spark, out))
     assert(again.count() == printers.count())
     // record order inside each group survives (row_idx rebuilt by position)

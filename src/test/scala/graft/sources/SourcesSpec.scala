@@ -27,7 +27,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("tonerType dual-type unification: array stays, scalar wraps, null stays") {
-    val p = DocumentIngest.printersUnified(doc)
+    val p = DocumentIngest.printers(doc)
     val tt = p.select($"ID".cast("string"), $"printerInfo.tonerType")
       .as[(String, Option[Seq[String]])].collect().toMap
     assert(tt("3") == Some(Seq("W1470A")))
@@ -81,6 +81,23 @@ class SourcesSpec extends SparkSpec {
     assert(polled.nonEmpty)
   }
 
+  test("S5: one poll per distinct IP per action; a pre-filtered frame polls only kept devices") {
+    val devices = Seq("10.0.0.1", "10.0.0.2", "10.0.0.2", "10.0.0.3", "10.0.0.1")
+      .toDF("ip")
+    CountingSnmpClient.polls.reset()
+    val all = DevicePoll.walk(spark, devices, SnmpPayload.SuppliesBase,
+      new CountingSnmpClient, parallelism = 2)
+    assert(all.select("ip").distinct().count() == 3)
+    assert(CountingSnmpClient.polls.sum() == 3)
+
+    CountingSnmpClient.polls.reset()
+    val kept = DevicePoll.walk(spark, devices.where($"ip".isin("10.0.0.2", "10.0.0.3")),
+      SnmpPayload.SuppliesBase, new CountingSnmpClient, parallelism = 2)
+    assert(kept.select("ip").distinct().as[String].collect().toSet ==
+      Set("10.0.0.2", "10.0.0.3"))
+    assert(CountingSnmpClient.polls.sum() == 2)
+  }
+
   test("A1/J4/F9-F11: SNMP walk rows → ordered cartridge structs") {
     val client = new DeterministicSnmpFake(failEvery = 0)
     val devices = Seq("10.0.1.7").toDF("ip")
@@ -104,7 +121,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("FleetSnapshot: flatten + first-wins colors + raw nulls") {
-    val snap = FleetSnapshot(DocumentIngest.printersUnified(doc))
+    val snap = FleetSnapshot(DocumentIngest.printers(doc))
     val byId = snap.collect().map(r => r.getAs[String]("id") -> r).toMap
     assert(byId("3").getAs[String]("Status") == "online")
     // float("37%") fails in the reference, so the formatted string is
@@ -139,7 +156,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("J3: last-wins id map + sheet update only touches matching rows") {
-    val snap = FleetSnapshot(DocumentIngest.printersUnified(doc))
+    val snap = FleetSnapshot(DocumentIngest.printers(doc))
     val idMap = FleetSnapshot.upsertIdMap(snap)
     // duplicate canonical id 7 ("7.0" row_idx=1, " 7\n" row_idx=2): later wins
     val seven = idMap.where(col("id") === "7").collect().head
@@ -156,4 +173,18 @@ class SourcesSpec extends SparkSpec {
     assert(rows("7.0").getAs[String]("Comment") == "keep")   // non-target col kept
     assert(updated.columns.contains("Toner Type"))           // column append
   }
+}
+
+/** [[DeterministicSnmpFake]] that counts its walks; the counter is
+  * JVM-wide because local-mode tasks run in the test JVM. */
+final class CountingSnmpClient extends DeviceClient {
+  private val fake = new DeterministicSnmpFake(failEvery = 0)
+  override def walk(ip: String, baseOid: String): Seq[(String, String)] = {
+    CountingSnmpClient.polls.increment()
+    fake.walk(ip, baseOid)
+  }
+}
+
+object CountingSnmpClient {
+  val polls = new java.util.concurrent.atomic.LongAdder
 }

@@ -5,7 +5,7 @@ import graft.sources.DocumentIngest
 
 class TicketsSpec extends SparkSpec {
 
-  private lazy val printers = DocumentIngest.printersUnified(
+  private lazy val printers = DocumentIngest.printers(
     DocumentIngest.readDocument(spark,
       getClass.getResource("/printers.json").getPath))
 
@@ -99,75 +99,65 @@ class TicketsSpec extends SparkSpec {
     assert(TicketPlugins.byAlias("technician").name == "tech")
   }
 
-  test("a9 column renderer agrees byte-for-byte with the row-level plugin") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // Adversarial tickets: escaping in every field, empty model (falsy
-    // subject part), blank-vs-set branch id across both groups, and
-    // 0/1/3-item carts (bare qty vs summed total vs empty render).
-    val tickets = Seq(
-      ("a&b <x>", "12", "sn'1", "M\"1", "Ad<dr", "c&c", "05'0",
-        "Branches_Grouped", Seq("Black&White"), Seq(3)),
-      ("סטימצקי", "", "sn2", "", "Addr", "Mgr", "052",
-        "Branches_Grouped", Seq("Black", "Cy<an", "Yellow"), Seq(2, 1, 4)),
-      ("c", " 7 ", "sn3", "M3", "A", "m", "05",
-        "Company_Grouped", Seq.empty[String], Seq.empty[Int]))
-    val df = tickets.toDF("customer", "bid", "serial", "model", "address",
-      "contact", "phone", "group", "labels", "qtys")
-    val rendered = df.select(
-      TonerOrder.subjectCol(col("customer"), col("model"), col("group"),
-        col("bid")).as("subject"),
-      TonerOrder.htmlCol(col("customer"), col("serial"), col("model"),
-        col("address"), col("contact"), col("phone"), col("labels"),
-        col("qtys")).as("html")).collect()
-    tickets.zip(rendered).foreach { case (t, row) =>
-      val ticket = Ticket(t._1, t._2, t._3, t._4, t._5, t._6, t._7, t._8, Nil)
-      val items = t._9.zip(t._10).map { case (l, q) => TicketItem(l, q) }
-      assert(row.getString(0) == TonerOrder.subject(ticket))
-      assert(row.getString(1) == TonerOrder.html(ticket, items))
-    }
+  test("subject: null group keeps the [bid] suffix, padded bid renders stripped") {
+    val t = Ticket("a&b <x>", "\t12 ", "sn'1", "M\"1", "Ad<dr", "c&c", "05'0",
+      null, Nil)
+    // fields.get("group","") != 'Company_Grouped' is TRUE for a missing
+    // group; str(bid).strip() removes the tab and the space
+    assert(TonerOrder.subject(t) == "הזמנת טונרים - a&b <x> | M\"1 [12]")
+    assert(DrumOrder.subject(t) == "הזמנת דרמים - a&b <x> | M\"1 [12]")
+    assert(PrinterTechnician.subject(t) ==
+      "פתיחת קריאת שירות - a&b <x> | M\"1 [12]")
+    assert(DrumOrder.subject(t.copy(group = "Company_Grouped")) ==
+      "הזמנת דרמים - a&b <x> | M\"1")
+    // blank-after-strip bid: no suffix; null customer and model: bare base
+    assert(TonerOrder.subject(t.copy(branchId = " \t", customer = null,
+      model = null)) == "הזמנת טונרים")
   }
 
-  test("a9b/a9c column renderers match row-level, incl. null group + padded bid") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // The two branches the a9 parity rows never reached: a NULL group
-    // (Python fields.get("group","") != 'Company_Grouped' is TRUE for a
-    // missing group → ' [bid]' suffix still fires) and a TAB/space-
-    // padded bid whose suffix renders STRIPPED. Plus Company-group
-    // suffix suppression, empty-items drum render, tech's null toAddr.
-    val tickets = Seq(
-      ("a&b <x>", "\t12 ", "sn'1", "M\"1", "Ad<dr", "c&c", "05'0",
-        null: String, Seq("DR<um>&1"), Seq(3), "note & \"q\"\nline2", "x@y"),
-      ("c", " 7 ", "sn3", "M3", "A", "m", "05",
-        "Company_Grouped", Seq.empty[String], Seq.empty[Int], "n",
-        null: String),
-      ("סטימצקי", "", "sn2", "", "Addr", "Mgr", "052",
-        "Branches_Grouped", Seq("T1"), Seq(2), "", ""))
-    val df = tickets.toDF("customer", "bid", "serial", "model", "address",
-      "contact", "phone", "group", "labels", "qtys", "notes", "toAddr")
-    val rendered = df.select(
-      DrumOrder.subjectCol(col("customer"), col("model"), col("group"),
-        col("bid")).as("dsub"),
-      DrumOrder.htmlCol(col("customer"), col("serial"), col("model"),
-        col("address"), col("contact"), col("phone"), col("labels"),
-        col("qtys")).as("dhtml"),
-      PrinterTechnician.subjectCol(col("customer"), col("model"),
-        col("group"), col("bid")).as("tsub"),
-      PrinterTechnician.htmlCol(col("customer"), col("serial"), col("model"),
-        col("address"), col("contact"), col("phone"), col("notes"),
-        col("toAddr")).as("thtml"),
-      TonerOrder.subjectCol(col("customer"), col("model"), col("group"),
-        col("bid")).as("osub")).collect()
-    tickets.zip(rendered).foreach { case (t, row) =>
-      val ticket = Ticket(t._1, t._2, t._3, t._4, t._5, t._6, t._7, t._8, Nil)
-      val items = t._9.zip(t._10).map { case (l, q) => TicketItem(l, q) }
-      assert(row.getString(0) == DrumOrder.subject(ticket))
-      assert(row.getString(1) == DrumOrder.html(ticket, items))
-      assert(row.getString(2) == PrinterTechnician.subject(ticket))
-      assert(row.getString(3) == PrinterTechnician.html(ticket, items,
-        notes = t._11, toAddr = Option(t._12).getOrElse("")))
-      assert(row.getString(4) == TonerOrder.subject(ticket))
+  test("html: escaping in every field, 0/1/3 toner items, empty drum, empty toAddr") {
+    val t = Ticket("a&b <x>", "12", "sn'1", "M\"1", "Ad<dr", "c&c", "05'0",
+      "Branches_Grouped", Nil)
+    def cell(p: TicketPlugin, label: String, v: String, wrap: Boolean = false) =
+      p.oracleRowOpen(label, wrap) + v + "</td></tr>"
+    def fieldsEscaped(p: TicketPlugin, html: String) = {
+      assert(html.startsWith(p.oracleOpen) && html.endsWith("</table></div>"))
+      Seq("a&amp;b &lt;x&gt;", "sn&#x27;1", "M&quot;1", "Ad&lt;dr", "c&amp;c",
+        "05&#x27;0").foreach(v => assert(html.contains(">" + v + "</td>"), v))
+      assert(!html.contains("<x>") && !html.contains("sn'1"))
     }
+
+    val none = TonerOrder.html(t, Nil)
+    fieldsEscaped(TonerOrder, none)
+    assert(none.contains(cell(TonerOrder, "צבע טונר", "")))
+    assert(none.contains(cell(TonerOrder, "כמות טונרים", "0")))
+    val one = TonerOrder.html(t, Seq(TicketItem("Black&White", 3)))
+    assert(one.contains(cell(TonerOrder, "צבע טונר", "Black&amp;White")))
+    assert(one.contains(cell(TonerOrder, "כמות טונרים", "3")))
+    val three = TonerOrder.html(t,
+      Seq(TicketItem("Black", 2), TicketItem("Cy<an", 1), TicketItem("Yellow", 4)))
+    assert(three.contains(cell(TonerOrder, "צבע טונר",
+      "Black × 2, Cy&lt;an × 1, Yellow × 4")))
+    assert(three.contains(cell(TonerOrder, "כמות טונרים", "7")))
+    assert(three.contains(cell(TonerOrder, "כתובת מלאה לאספקת המשלוח", "Ad&lt;dr",
+      wrap = true)))
+
+    val drum = DrumOrder.html(t, Nil)
+    fieldsEscaped(DrumOrder, drum)
+    assert(drum.contains(cell(DrumOrder, "סוג דרם", "")))
+    assert(drum.contains(cell(DrumOrder, "כמות דרמים", "0")))
+    // drum renders items[0] only
+    val drumOne = DrumOrder.html(t, Seq(TicketItem("DR<um>&1", 3), TicketItem("x", 9)))
+    assert(drumOne.contains(cell(DrumOrder, "סוג דרם", "DR&lt;um&gt;&amp;1")))
+    assert(drumOne.contains(cell(DrumOrder, "כמות דרמים", "3")))
+
+    val notes = "note & \"q\"\nline2"
+    val tech = PrinterTechnician.html(t, Nil, notes = notes, toAddr = "")
+    fieldsEscaped(PrinterTechnician, tech)
+    assert(tech.contains(cell(PrinterTechnician, "הערות",
+      "note &amp; &quot;q&quot;\nline2", wrap = true)))
+    assert(tech.contains(cell(PrinterTechnician, "נמען", "")))
+    // Python `to_addr or ""`: a null recipient renders like an empty one
+    assert(PrinterTechnician.html(t, Nil, notes = notes, toAddr = null) == tech)
   }
 }
