@@ -19,15 +19,15 @@ import org.apache.spark.sql.functions._
   * (LSH components are dense blobs, diameter 2-4), so this beats the
   * constant-factor-heavy O(log n) large-star/small-star alternation in
   * practice; `maxRounds` guards the adversarial long-chain case — on
-  * hitting it we ESCALATE to the large-star/small-star contraction on
-  * the label-CONTRACTED graph (VERDICT r15 item 6: a 100 TB
-  * chain-shaped graph — paginated boilerplate — would hit the bound;
-  * half-merged clusters and a hard failure are both wrong answers
-  * there). The contraction runs on one node per current label, so the
-  * min-propagation rounds already paid shrink the escalated problem;
-  * composing the two mappings is exact because min propagation never
-  * merges across true components. `escalateToStar = false` restores
-  * the fail-loudly behavior for callers that budget rounds strictly.
+  * hitting it [[labels]] ESCALATES on its own to the large-star/
+  * small-star contraction (O(log n) rounds, the MapReduce
+  * connected-components literature) on the label-CONTRACTED graph
+  * (VERDICT r15 item 6: a 100 TB chain-shaped graph — paginated
+  * boilerplate — would hit the bound; half-merged clusters and a hard
+  * failure are both wrong answers there). The contraction runs on one
+  * node per current label, so the min-propagation rounds already paid
+  * shrink the escalated problem; composing the two mappings is exact
+  * because min propagation never merges across true components.
   */
 object ConnectedComponents {
 
@@ -45,10 +45,13 @@ object ConnectedComponents {
     * Only edge-touched nodes enter the loop: a node with no edge can
     * never change label, and in a deduplicated corpus near-dup members
     * are a small minority — loop state is |touched|, not |V|, and the
-    * untouched majority joins back once at the end as singletons. */
+    * untouched majority joins back once at the end as singletons.
+    *
+    * A run still changing labels after `maxRounds` min-label rounds
+    * escalates to [[starPairs]] (see the object doc); `maxRounds = 0`
+    * escalates after the first changing round. */
   def labels(edges: DataFrame, srcCol: String, dstCol: String,
-      nodes: DataFrame, nodeCol: String, maxRounds: Int = 50,
-      escalateToStar: Boolean = true): DataFrame = {
+      nodes: DataFrame, nodeCol: String, maxRounds: Int = 50): DataFrame = {
     // one exchange establishes hash(src) (r20, guide §2.4): the
     // explicit src repartition satisfies the (src, dst) distinct
     // (subset rule), the node-set distinct below, AND the per-round
@@ -85,9 +88,6 @@ object ConnectedComponents {
       // changes, and a run converging in exactly maxRounds still gets
       // its zero-change confirmation pass (round maxRounds+1)
       if (changed > 0 && round > maxRounds) {
-        require(escalateToStar,
-          s"connected components did not converge in $maxRounds rounds " +
-            "(component diameter exceeds the bound); raise maxRounds")
         System.err.println(s"[cc] WARNING: min-label hit the $maxRounds-" +
           "round bound — escalating to large-star/small-star contraction " +
           "on the label-contracted graph (O(log n) rounds)")
@@ -119,10 +119,9 @@ object ConnectedComponents {
     attachLabels(nodes, nodeCol, labels)
   }
 
-  /** Shared closing step of both variants: left-join the computed
+  /** Closing step of both exits of [[labels]]: left-join the computed
     * (id, label) pairs onto the node set; absent nodes are singletons
-    * labeling themselves. One copy so the two algorithms can never
-    * return differently-shaped results. */
+    * labeling themselves. */
   private def attachLabels(nodes: DataFrame, nodeCol: String,
       pairs: DataFrame): DataFrame =
     nodes
@@ -131,29 +130,18 @@ object ConnectedComponents {
         col(pairs.columns(1)).as("tlabel")), col("id") === col("tid"), "left")
       .select(col("id"), coalesce(col("tlabel"), col("id")).as("label"))
 
-  /** Alternating large-star/small-star variant (the O(log n)-round
-    * algorithm from the MapReduce connected-components literature) for
-    * graphs where [[labels]]' O(diameter) rounds is the wrong bound —
-    * long chains, lattice-like graphs. Near-dup blobs don't need it;
-    * an adversarial similarity graph might.
+  /** Alternating large-star/small-star contraction over an ("u", "v")
+    * edge frame — [[labels]]' escalation once its O(diameter) rounds
+    * exceed `maxRounds` (long chains, lattice-like graphs). Returns the
+    * converged star forest as (u → component-min v) pairs for every
+    * edge-touched non-min node.
     *
     * State is an edge list that converges to a star per component
     * (every node → its component min). Per round: one groupBy per
     * star operation, both with map-side partial agg on the collected
     * neighbor mins; edges stay (child > parent)-oriented so the list
-    * shrinks monotonically once stars form.
-    */
-  def labelsStar(edges: DataFrame, srcCol: String, dstCol: String,
-      nodes: DataFrame, nodeCol: String, maxRounds: Int = 50): DataFrame =
-    attachLabels(nodes, nodeCol,
-      starPairs(edges.select(col(srcCol).as("u"), col(dstCol).as("v")),
-        maxRounds))
-
-  /** Core star contraction over an ("u", "v") edge frame; returns the
-    * converged star forest as (u → component-min v) pairs for every
-    * edge-touched non-min node. Shared by [[labelsStar]] and
-    * [[labels]]' maxRounds-exceeded escalation. */
-  private def starPairs(edges: DataFrame, maxRounds: Int): DataFrame = {
+    * shrinks monotonically once stars form. */
+  private[ops] def starPairs(edges: DataFrame, maxRounds: Int): DataFrame = {
     // orient every edge large→small ((u,v) with u > v), drop loops
     def orient(df: DataFrame): DataFrame = df
       .select(greatest(col("u"), col("v")).as("u"),

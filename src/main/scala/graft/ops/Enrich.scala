@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Normalize
@@ -50,7 +49,8 @@ object Enrich {
     * storeInfo.Manager/Phone (an empty employee cell never clobbers an
     * existing value, :26-29); `changed` column supports the run
     * summary's changed-row count. Expects `employees(id, name, phone)`
-    * (SideTables.employees shape). */
+    * plus `row_idx` when the sheet carries one (SideTables.employees
+    * shape). */
   def employees(printers: DataFrame, employees: DataFrame): DataFrame = {
     // build_employees_index is a dict — duplicate ids collapse with the
     // LAST row winning (employees.py:4-5); a plain join would instead
@@ -91,18 +91,6 @@ object Enrich {
     * `continue`. */
   private def bidOf(c: Column): Column = Normalize.safeInt(c)
 
-  /** J2 sub-op (a) — last-wins branch→address map over an ordered input
-    * (core/enrich/locations.py:47-56): max_by on the explicit row
-    * index, NOT last() (distributed order is undefined). Input:
-    * `locations(branch_id, address, primary_desc, secondary_desc,
-    * subscriber)` + `row_idx`. */
-  def addressMap(locations: DataFrame): DataFrame =
-    locations
-      .where(bidOf(col("branch_id")).isNotNull &&
-        length(trim(coalesce(col("address"), lit("")))) > 0)
-      .groupBy(bidOf(col("branch_id")).as("bid"))
-      .agg(max_by(trim(col("address")), col("row_idx")).as("address"))
-
   /** `_norm_text` (locations.py:19-25): strip + whitespace-collapse,
     * null when nothing remains (no lowercasing, unlike F1). */
   private def normText(c: Column): Column = {
@@ -110,54 +98,50 @@ object Enrich {
     when(s =!= "", s)
   }
 
-  /** J2 sub-op (b) — per-branch first-seen-ordered distinct
-    * (primary, secondary) pairs, each carrying the normalized non-null
-    * subscriber list in row order; ranks 1–2 kept (locations.py:57-78 +
-    * W1). Texts go through `_norm_text` — blank-after-strip halves are
-    * None, rows where BOTH are None are skipped, a single None half
-    * coerces to "" for pair identity (:66-70). */
-  def rankedPairs(locations: DataFrame): DataFrame = {
-    val pairs = locations
-      .where(bidOf(col("branch_id")).isNotNull &&
-        (normText(col("primary_desc")).isNotNull ||
-          normText(col("secondary_desc")).isNotNull))
-      .groupBy(bidOf(col("branch_id")).as("bid"),
-        coalesce(normText(col("primary_desc")), lit("")).as("primary_desc"),
-        coalesce(normText(col("secondary_desc")), lit("")).as("secondary_desc"))
-      .agg(min("row_idx").as("first_seen"),
-        array_sort(collect_list(when(normText(col("subscriber")).isNotNull,
-          struct(col("row_idx"), normText(col("subscriber")).as("subscriber")))))
-          .as("subs0"))
-      .withColumn("subscribers",
-        transform(col("subs0"), s => s.getField("subscriber")))
-      .drop("subs0")
-    val w = Window.partitionBy("bid").orderBy("first_seen")
-    pairs.withColumn("rank", row_number().over(w)).where(col("rank") <= 2)
-  }
-
-  /** J2 — full locations → branches enrich (locations.py:79-109):
-    * address (postal split, F7) + pair #1/#2 as
-    * firstDescription/secondDescription with LineID = first subscriber.
-    */
+  /** J2 — full locations → branches enrich (locations.py:37-111): the
+    * reference's single pass over the sheet as ONE per-branch aggregate
+    * over `locs(branch_id, address, primary_desc, secondary_desc,
+    * subscriber, row_idx)`, every order pinned to `row_idx`:
+    *  - address: last non-blank wins (:47-56) — max_by on the row index,
+    *    nulled on blank rows because max_by skips null orderings;
+    *  - pairs (:57-78 + W1): the row-sorted list of described rows; its
+    *    distinct (primary, secondary) pairs in first-seen order, ranks
+    *    1–2 kept. Texts go through `_norm_text`: a row with BOTH halves
+    *    blank is skipped, a single blank half reads "" (:66-70). Each
+    *    pair's LineID is its first non-blank subscriber, else ""
+    *    (:98: nums[0] if nums else "").
+    * Then postal split (F7) and a broadcast join onto the branches. */
   def locations(printers: DataFrame, locs: DataFrame): DataFrame = {
-    val addr = addressMap(locs)
-    val pairs = rankedPairs(locs)
-    def descStruct(rank: Int): Column =
-      max_by(when(col("rank") === rank, struct(
-        // missing subscriber → "" (locations.py:98: nums[0] if nums else "")
-        coalesce(get(col("subscribers"), lit(0)), lit("")).as("LineID"),
-        col("primary_desc").as("PrimaryDescription"),
+    val address = trim(col("address"))
+    val (primary, secondary) = (normText(col("primary_desc")), normText(col("secondary_desc")))
+    val perBranch = locs
+      .where(bidOf(col("branch_id")).isNotNull)
+      .groupBy(bidOf(col("branch_id")).as("bid"))
+      .agg(
+        max_by(address, when(address =!= "", col("row_idx"))).as("b_address"),
+        array_sort(collect_list(when(primary.isNotNull || secondary.isNotNull, struct(
+          col("row_idx").as("r"),
+          coalesce(primary, lit("")).as("p"),
+          coalesce(secondary, lit("")).as("s"),
+          normText(col("subscriber")).as("sub"))))).as("rows"))
+      // materialized before the subscriber filter below indexes it
+      // (README: lambdas never index a captured expression)
+      .withColumn("pairs", slice(array_distinct(
+        transform(col("rows"), r => struct(r("p").as("p"), r("s").as("s")))), 1, 2))
+    def desc(rank: Int): Column = {
+      val pair = get(col("pairs"), lit(rank - 1))
+      val firstSub = get(filter(col("rows"), r =>
+        r("p") === pair("p") && r("s") === pair("s") && r("sub").isNotNull), lit(0))
+      when(pair.isNotNull, struct(
+        coalesce(firstSub("sub"), lit("")).as("LineID"),
+        pair("p").as("PrimaryDescription"),
         // (sic) the typo is part of the reference schema,
         // core/enrich/locations.py:95-103
-        col("secondary_desc").as("SecondayDescription"))),
-        when(col("rank") === rank, lit(1)).otherwise(lit(0)))
-    val perBranch = pairs.groupBy("bid")
-      .agg(descStruct(1).as("firstDescription"), descStruct(2).as("secondDescription"))
-      .join(addr, Seq("bid"), "full")
+        pair("s").as("SecondayDescription")))
+    }
     val (postal, cleanAddr) = Normalize.splitPostal(col("b_address"))
     val side = broadcast(perBranch
-      .select(col("bid"), col("address").as("b_address"),
-        col("firstDescription").as("b_first"), col("secondDescription").as("b_second"))
+      .select(col("bid"), col("b_address"), desc(1).as("b_first"), desc(2).as("b_second"))
       .withColumn("b_postal", postal)
       .withColumn("b_location", cleanAddr))
     val isBranch = col("group") === "Branches_Grouped"

@@ -29,33 +29,17 @@ object ScanMerge {
     * exactly once (a per-device call, not a result TABLE), so a results
     * frame carrying duplicate IPs (e.g. an appended retry) must not fan
     * the fleet out through the merge join — keep one row per key.
-    * With `orderCol` (a row-order column in `r`, e.g. an append index)
-    * the winner is `max_by` over it — the reference's dict-overwrite
-    * "last appended wins", exactly. Without one, "last" is not
-    * reconstructable and the pick falls back to min over the value
-    * struct — deterministic but value-lexicographic. Cost note: either
-    * way the dedup hashes on the SAME key the merge join shuffles the
-    * results by, so it rides that exchange (one extra partial-combining
-    * aggregate, no extra shuffle). */
-  private def onePerIp(r: DataFrame, orderCol: Option[String]): DataFrame = {
-    val valueCols =
-      r.columns.filterNot(c => c == "scan_ip" || orderCol.contains(c))
-    val packed = struct(valueCols.map(col): _*)
-    val winner = orderCol match {
-      case Some(o) =>
-        // a bare max_by(_, ord) DROPS rows whose stamp is null (the agg
-        // ignores null ordering values — a key whose rows are all
-        // unstamped would yield a null struct, i.e. corrupted scan
-        // values). Rank instead: any stamped row beats any unstamped
-        // one, and ties — including the all-unstamped key — fall back
-        // to the value struct so the pick is total and deterministic.
-        val ord = col(s"`$o`")
-        max_by(packed,
-          struct(ord.isNotNull.as("has"), ord.as("o"), packed.as("v")))
-      case None => min(packed)
-    }
+    * Spark keeps no append order across a results frame, so the
+    * reference's "last appended wins" is not reconstructable: the pick
+    * is the min over the value struct — deterministic but
+    * value-lexicographic. Cost note: the dedup hashes
+    * on the SAME key the merge join shuffles the results by, so it rides
+    * that exchange (one extra partial-combining aggregate, no extra
+    * shuffle). */
+  private def onePerIp(r: DataFrame): DataFrame = {
+    val valueCols = r.columns.filterNot(_ == "scan_ip")
     r.groupBy("scan_ip")
-      .agg(winner.as("__v"))
+      .agg(min(struct(valueCols.map(col): _*)).as("__v"))
       .select(col("scan_ip") +: valueCols.map(c => col(s"__v.`$c`").as(c)): _*)
   }
 
@@ -64,11 +48,10 @@ object ScanMerge {
     * answered) or `miss` (selected but nothing came back — the
     * reference's per-printer except-branch). Unselected rows keep their
     * printerInfo verbatim. */
-  private def writeBack(printers: DataFrame, r0: DataFrame, selected: Column,
-      orderCol: Option[String])(
+  private def writeBack(printers: DataFrame, r0: DataFrame, selected: Column)(
       hit: Column => Column, miss: Column => Column): DataFrame = {
     val piBase = piBaseOf(printers)
-    val r = onePerIp(r0, orderCol)
+    val r = onePerIp(r0)
     val scanCols = r.columns.toSeq
     printers
       .withColumn("__sel", selected)
@@ -86,19 +69,13 @@ object ScanMerge {
     * @param selected the plugin's selection predicate over `printers`
     *                 (e.g. valid IP ∧ model set; NOTE the reference's
     *                 --only-ip mode selects by IP equality ALONE — no
-    *                 type screen — so pass only the ip predicate there)
-    * @param orderCol optional row-order column in `results` (append
-    *                 index): when present, a duplicated IP resolves
-    *                 last-appended-wins (the reference's dict
-    *                 overwrite); when absent, struct-min */
-  def apply(printers: DataFrame, results: DataFrame, selected: Column,
-      orderCol: Option[String] = None): DataFrame = {
+    *                 type screen — so pass only the ip predicate there) */
+  def apply(printers: DataFrame, results: DataFrame, selected: Column): DataFrame = {
     val piType = printers.schema("printerInfo").dataType.asInstanceOf[StructType]
     val cartsType = piType("cartridges").dataType
-    val r = results.select(Seq(col("ip").as("scan_ip"),
-      col("status").as("scan_status"), col("cartridges").as("scan_carts")) ++
-      orderCol.map(o => col(s"`$o`")): _*)
-    writeBack(printers, r, selected, orderCol)(
+    val r = results.select(col("ip").as("scan_ip"),
+      col("status").as("scan_status"), col("cartridges").as("scan_carts"))
+    writeBack(printers, r, selected)(
       hit = _.withField("status", col("scan_status"))
         .withField("cartridges", col("scan_carts").cast(cartsType)),
       miss = _.withField("status", lit("offline"))
@@ -145,22 +122,15 @@ object ScanMerge {
     *                 set, mirroring the reference's group builder)
     * @param web      which family's probe/write/empty rules apply */
   def tonerType(printers: DataFrame, results: DataFrame, selected: Column,
-      web: Boolean, orderCol: Option[String] = None): DataFrame = {
+      web: Boolean): DataFrame = {
     val piType = printers.schema("printerInfo").dataType.asInstanceOf[StructType]
     val ttType = piType("tonerType").dataType
     val piBase = piBaseOf(printers)
-    val ride = orderCol.map(o => col(s"`$o`")).toSeq
-    val r = onePerIp(
-      if (web) results.select(Seq(col("ip").as("scan_ip"),
-        DocumentIngest.unifyTonerType(col("tid")).cast(ttType).as("scan_tt"))
-        ++ ride: _*)
-      else results.select(Seq(col("ip").as("scan_ip"),
-        col("codes").cast(ttType).as("scan_tt")) ++ ride: _*),
-      orderCol)
+    val r = onePerIp(results.select(col("ip").as("scan_ip"),
+      (if (web) DocumentIngest.unifyTonerType(col("tid")) else col("codes"))
+        .cast(ttType).as("scan_tt")))
     val emptyPreset =
       (if (web) array(lit("")) else array()).cast(ttType)
-    val ipN = DocumentIngest.ipOf(printers)
-    val goodIp = ipN.isNotNull && !lower(ipN).isin(DocumentIngest.BadIps: _*)
     // global document order: groups in GroupKeys order, then row_idx
     // (iter_printers walks group arrays in declaration order) — as a
     // two-field struct ordering, NOT a packed arithmetic key, so it
@@ -177,7 +147,8 @@ object ScanMerge {
       .withColumn("__t", trim(coalesce(col("Type").cast("string"), lit(""))))
       .withColumn("__gr", grpRank)
       .withColumn("__ri", col("row_idx").cast("long"))
-      .withColumn("__gip", when(goodIp, ipN))
+      .withColumn("__gip",
+        when(DocumentIngest.hasValidIp(printers), DocumentIngest.ipOf(printers)))
     def firstByDocOrder(v: Column) =
       struct(col("__gr").as("g"), col("__ri").as("r"), v.as("v"))
     val presets = sel.filter(col("__sel"))
@@ -211,14 +182,12 @@ object ScanMerge {
     * {"Offline", "critical"} — not the tonerFinder ("offline", [])
     * pair. The struct replaces any previous printerError wholesale
     * (`info["printerError"] = {...}`). */
-  def alerts(printers: DataFrame, results: DataFrame, selected: Column,
-      orderCol: Option[String] = None): DataFrame = {
+  def alerts(printers: DataFrame, results: DataFrame, selected: Column): DataFrame = {
     def pe(p: Column, s: Column): Column =
       struct(p.as("problem"), s.as("severity"))
-    val r = results.select(Seq(col("ip").as("scan_ip"),
+    val r = results.select(col("ip").as("scan_ip"),
       col("problem").as("scan_problem"), col("severity").as("scan_severity"))
-      ++ orderCol.map(o => col(s"`$o`")): _*)
-    writeBack(printers, r, selected, orderCol)(
+    writeBack(printers, r, selected)(
       hit = _.withField("printerError",
         pe(col("scan_problem"), col("scan_severity"))),
       miss = _.withField("printerError", pe(lit("Offline"), lit("critical"))))

@@ -147,7 +147,15 @@ object Pipeline {
 
   /** Execute in order with per-stage timing; a failing stage logs and is
     * skipped (input flows through). `checkpoint` is called after each
-    * successful stage (snapshot-between-steps semantics). */
+    * successful stage (snapshot-between-steps semantics).
+    *
+    * Stages are lazy, so "failing" means failing while the stage BUILDS
+    * its plan (`st.f(df)` throws — e.g. an unresolved column). A plan
+    * that builds but fails when executed is not caught here: it surfaces
+    * at the caller's first action on `RunSummary.out` (or inside
+    * `checkpoint`), and `RunSummary` does not record it. Per-stage
+    * timing likewise measures plan construction unless `checkpoint`
+    * runs an action. */
   def run(input: DataFrame, stages: Seq[Stage],
       checkpoint: (String, DataFrame) => Unit = (_, _) => ()): RunSummary = {
     val (results, out) = stages.foldLeft((Vector.empty[StageResult], input)) {

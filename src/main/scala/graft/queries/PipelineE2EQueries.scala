@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -234,15 +234,11 @@ object PipelineE2EQueries {
         array(concat(lit("TT"), (k % 4).cast("string"))).as("codes"))
 
     val p1 = Enrich.locations(Enrich.employees(p0, emp), locs)
-    def goodIp(df: DataFrame) = {
-      val ip = DocumentIngest.ipOf(df)
-      ip.isNotNull && !lower(ip).isin(DocumentIngest.BadIps: _*)
-    }
     val modelOf = lower(trim(coalesce(col("Type"), lit(""))))
     val p2 = ScanMerge(p1, tfRes,
-      goodIp(p1) && modelOf.isin("m404dn", "m426fdw"))
+      DocumentIngest.hasValidIp(p1) && modelOf.isin("m404dn", "m426fdw"))
     val p3 = ScanMerge.tonerType(p2, ttRes,
-      goodIp(p2) && modelOf === "e60055", web = false)
+      DocumentIngest.hasValidIp(p2) && modelOf === "e60055", web = false)
     // storeInfo fields ride the snapshot projection (no fleet re-join)
     val snapPlus = FleetSnapshot(p3,
       col("storeInfo").getField("Manager").as("manager"),

@@ -158,7 +158,13 @@ object DocumentIngest {
     coalesce(picks :+ lit(null).cast(StringType): _*)
   }
 
+  /** P3's predicate over `df`'s rows: [[ipOf]] is non-null and not one
+    * of the [[BadIps]] placeholders (case-insensitive). */
+  def hasValidIp(df: DataFrame): Column = {
+    val ip = ipOf(df)
+    ip.isNotNull && !lower(ip).isin(BadIps: _*)
+  }
+
   def withValidIp(df: DataFrame): DataFrame =
-    df.withColumn("ip", ipOf(df))
-      .where(col("ip").isNotNull && !lower(col("ip")).isin(BadIps: _*))
+    df.where(hasValidIp(df)).withColumn("ip", ipOf(df))
 }

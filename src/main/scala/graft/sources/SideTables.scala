@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{LongType, StringType}
 
 /** Side-table ingest: header-synonym projection and row hygiene
   * (SURVEY.md §2 S3/S4).
@@ -54,11 +54,14 @@ object SideTables {
     * ONE source column — its first occurrence — like
     * `idx(opts)`/`headers.index` (employee_source.py:18-26); no match →
     * null column. Values are cast to string and trimmed (:37-41). */
-  def selectBySynonyms(df: DataFrame, spec: Seq[(String, Seq[String])]): DataFrame = {
+  def selectBySynonyms(df: DataFrame, spec: Seq[(String, Seq[String])]): DataFrame =
+    df.select(synonymCols(df, spec): _*)
+
+  private def synonymCols(df: DataFrame, spec: Seq[(String, Seq[String])]): Seq[Column] = {
     // first occurrence wins on duplicate normalized headers
     val byNorm: Map[String, String] =
       df.columns.reverseIterator.map(c => headerNorm(c) -> c).toMap
-    val cols = spec.map { case (name, syns) =>
+    spec.map { case (name, syns) =>
       val hit = syns.iterator.flatMap(s => byNorm.get(headerNorm(s)))
         .nextOption()
       val c: Column = hit match {
@@ -69,17 +72,14 @@ object SideTables {
       }
       c.as(name)
     }
-    df.select(cols: _*)
   }
 
   /** Drop rows where every projected column is null/blank
     * (employee_source.py:33-35; location_source.py:45-52). */
-  def dropBlankRows(df: DataFrame): DataFrame = {
-    val anyFilled = df.columns
-      .map(c => trim(coalesce(col(c).cast(StringType), lit(""))) =!= "")
-      .reduce(_ || _)
-    df.where(anyFilled)
-  }
+  def dropBlankRows(df: DataFrame): DataFrame = df.where(anyFilled(df.columns.toSeq))
+
+  private def anyFilled(cols: Seq[String]): Column =
+    cols.map(c => trim(coalesce(col(c).cast(StringType), lit(""))) =!= "").reduce(_ || _)
 
   /** Employee synonyms — the reference's exact lists
     * (employee_source.py:24-26). */
@@ -99,9 +99,17 @@ object SideTables {
     "secondary_desc" -> Seq("תאור שרות משני", "secondary description"),
     "subscriber" -> Seq("מספר מנוי", "subscriber"))
 
-  def employees(raw: DataFrame): DataFrame =
-    dropBlankRows(selectBySynonyms(dedupeHeaders(raw), EmployeeSpec))
+  /** Synonym projection + blank-row drop. A raw `row_idx` column (the
+    * sheet's row order) rides along as a long: the enrich joins order
+    * their last-wins and first-seen picks by it. It is not sheet
+    * content, so it does not keep an otherwise blank row. */
+  private def sideTable(raw: DataFrame, spec: Seq[(String, Seq[String])]): DataFrame = {
+    val df = dedupeHeaders(raw)
+    val rowIdx = df.columns.find(_ == "row_idx").map(c => col(c).cast(LongType).as(c))
+    df.select(synonymCols(df, spec) ++ rowIdx: _*).where(anyFilled(spec.map(_._1)))
+  }
 
-  def locations(raw: DataFrame): DataFrame =
-    dropBlankRows(selectBySynonyms(dedupeHeaders(raw), LocationSpec))
+  def employees(raw: DataFrame): DataFrame = sideTable(raw, EmployeeSpec)
+
+  def locations(raw: DataFrame): DataFrame = sideTable(raw, LocationSpec)
 }

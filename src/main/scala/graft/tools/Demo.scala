@@ -41,9 +41,7 @@ object Demo {
       val colorant = DevicePoll.walk(spark, devices, SnmpPayload.ColorantBase, client, 4)
       val results = SnmpPayload.cartridges(supplies.union(colorant))
         .withColumn("status", lit("online"))
-      val ip = DocumentIngest.ipOf(df)
-      val selected = ip.isNotNull && !lower(ip).isin(DocumentIngest.BadIps: _*)
-      graft.ops.ScanMerge(df, results, selected)
+      graft.ops.ScanMerge(df, results, DocumentIngest.hasValidIp(df))
     }
 
     val sheet = Seq(("105", "Branch 105", ""), ("3", "HQ", ""))

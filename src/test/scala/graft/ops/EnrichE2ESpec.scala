@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -52,20 +53,79 @@ class EnrichE2ESpec extends SparkSpec {
     assert(out.where($"group" === "Company_Grouped" && $"changed").count() == 0)
   }
 
+  private def descOf(d: Row): (String, String, String) =
+    if (d == null) null
+    else (d.getAs[String]("PrimaryDescription"), d.getAs[String]("SecondayDescription"),
+      d.getAs[String]("LineID"))
+
+  /** Branch → (Location, Postal, first pair, second pair). */
+  private def storeInfoById(out: DataFrame): Map[String, (String, String,
+      (String, String, String), (String, String, String))] =
+    out.where($"group" === "Branches_Grouped")
+      .select($"ID", $"storeInfo.Location", $"storeInfo.Postal",
+        $"storeInfo.firstDescription", $"storeInfo.secondDescription")
+      .collect().map(r => r.getString(0) -> ((r.getString(1), r.getString(2),
+        descOf(r.getStruct(3)), descOf(r.getStruct(4))))).toMap
+
+  // branch 105's golden values under the locations fixture: row_idx=3's
+  // address wins with its postal stripped; the first-seen pair carries
+  // its first subscriber; rank 3 is dropped
+  private val golden105 = ("אלנבי 9, תל אביב", "6100002",
+    ("אינטרנט", "ראשי", "77001"), ("טלפוניה", "משני", "88001"))
+
   test("J2: last-wins address, postal split, first-seen pair ranking") {
-    val out = Enrich.locations(printers, locations)
-    val b105 = out.where($"ID" === "105")
-      .select("storeInfo.Location", "storeInfo.Postal",
-        "storeInfo.firstDescription", "storeInfo.secondDescription")
+    // beside the fixture: 212 gains a both-halves-blank row (skipped —
+    // its subscriber must not surface), a second pair with a blank
+    // primary whose first row has a blank subscriber, and a third pair
+    // (dropped); 330 has pairs but no address; 331 (a copy of printer
+    // 330) has an address but no pairs
+    val extra = Seq(
+      (5L, "212", "   ", " ", "  ", "55000"),
+      (6L, "212", null, null, "גיבוי", " "),
+      (7L, "212", "", " ", "גיבוי", "66001"),
+      (8L, "212", null, "סיבים", "x", "66002"),
+      (9L, "330", "", "טלפוניה", " משני ", null),
+      (10L, "330", "  ", "טלפוניה", "משני", "33001"),
+      (11L, "331", "רוטשילד 1 תל אביב 6500001", null, "", "70001"))
+      .toDF(locations.columns.toSeq: _*)
+    // rows arrive in reverse row order, spread over partitions: every
+    // order must come from row_idx, not arrival
+    val shuffled = locations.union(extra).orderBy($"row_idx".desc).repartition(3)
+    val fleet = printers.union(
+      printers.where($"ID" === "330").withColumn("ID", lit("331")))
+    val got = storeInfoById(Enrich.locations(fleet, shuffled))
+    assert(got("105") == golden105)
+    assert(got("212") == (("דיזנגוף 50 תל אביב", null,
+      ("אינטרנט", "", "55001"), ("", "גיבוי", "66001"))))
+    assert(got("330") == ((null, null, ("טלפוניה", "משני", "33001"), null)))
+    assert(got("331") == (("רוטשילד 1 תל אביב", "6500001", null, null)))
+  }
+
+  test("J2: one per-branch aggregate — no window, no second aggregate") {
+    val plan = Enrich.locations(printers, locations).queryExecution.optimizedPlan
+    assert(plan.collect { case a: Aggregate => a }.size == 1, plan.treeString)
+    assert(plan.collect { case w: Window => w }.isEmpty, plan.treeString)
+  }
+
+  test("S4→J2: a Hebrew-header locations sheet keeps its row order through SideTables") {
+    val raw = locations.select($"branch_id".as("מס' סניף"), $"address".as("כתובת"),
+      $"primary_desc".as("תאור שרות ראשי"), $"secondary_desc".as("תאור שרות משני"),
+      $"subscriber".as("מספר מנוי"), $"row_idx".cast("string").as("row_idx"))
+    val side = SideTables.locations(raw)
+    assert(storeInfoById(Enrich.locations(printers, side))("105") == golden105)
+    // a row holding nothing but its row index is still a blank row
+    val blank = Seq[(String, String, String, String, String, String)](
+      (" ", "", null, null, " ", "5")).toDF(raw.columns.toSeq: _*)
+    assert(SideTables.locations(raw.union(blank)).count() == side.count())
+  }
+
+  test("S3→J1: the later employee row wins even when its name sorts lower") {
+    val raw = Seq(("0", "105", "zed", "0500000001"), ("1", "105", "amy", "0500000002"))
+      .toDF("row_idx", "Branch ID", "Contact", "Phone")
+    val b105 = Enrich.employees(printers, SideTables.employees(raw))
+      .where($"ID" === "105").select("storeInfo.Manager", "storeInfo.Phone")
       .collect().head
-    assert(b105.getString(0) == "אלנבי 9, תל אביב") // row_idx=3 wins, postal stripped
-    assert(b105.getString(1) == "6100002")
-    val first = b105.getStruct(2)
-    assert(first.getAs[String]("PrimaryDescription") == "אינטרנט") // first-seen pair
-    assert(first.getAs[String]("LineID") == "77001")               // first subscriber
-    val second = b105.getStruct(3)
-    assert(second.getAs[String]("PrimaryDescription") == "טלפוניה") // rank 2; rank 3 dropped
-    assert(second.getAs[String]("LineID") == "88001")
+    assert(b105.getString(0) == "amy" && b105.getString(1) == "0500000002")
   }
 
   test("J1+J2: a storeInfo inferred with only Manager/Phone is widened, not FIELD_NOT_FOUND") {

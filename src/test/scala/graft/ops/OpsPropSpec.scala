@@ -41,8 +41,9 @@ class OpsPropSpec extends SparkSpec {
       // union-find roots are min labels here because unions always
       // point the larger root at the smaller one
       assert(got == expect, s"n=$n edges=$edges")
+      // maxRounds = 0: star contraction after the first changing round
       val gotStar = ConnectedComponents
-        .labelsStar(edgeDf, "a", "b", (0L until n.toLong).toDF("id"), "id")
+        .labels(edgeDf, "a", "b", (0L until n.toLong).toDF("id"), "id", maxRounds = 0)
         .as[(Long, Long)].collect().toMap
       assert(gotStar == expect, s"star: n=$n edges=$edges")
     }

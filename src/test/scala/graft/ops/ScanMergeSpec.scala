@@ -146,38 +146,6 @@ class ScanMergeSpec extends SparkSpec {
     val hit = out.filter(col("group") === "Company_Grouped" && col("row_idx") === 0)
       .select(col("printerInfo.status")).collect().head.getString(0)
     assert(hit == "online")
-
-    // with a row-order column the RETRY row wins — the reference's
-    // dict-overwrite last-appended semantics, even though "retry-won"
-    // sorts after "online" (so struct-min would have picked the other)
-    val ordered = results.withColumn("scan_seq",
-      monotonically_increasing_id())
-    val out2 = ScanMerge(printers, ordered, selected,
-      orderCol = Some("scan_seq"))
-    assert(out2.count() == printers.count())
-    val hit2 = out2.filter(col("group") === "Company_Grouped" && col("row_idx") === 0)
-      .select(col("printerInfo.status")).collect().head.getString(0)
-    assert(hit2 == "retry-won")
-    // the order column must not leak into the merged output
-    assert(!out2.columns.contains("scan_seq"))
-
-    // null order stamps must not corrupt: an unstamped row LOSES to any
-    // stamped one...
-    val mixed = results.withColumn("scan_seq",
-      when(col("status") === "retry-won", lit(null).cast("long"))
-        .otherwise(lit(5L)))
-    val hit3 = ScanMerge(printers, mixed, selected, Some("scan_seq"))
-      .filter(col("group") === "Company_Grouped" && col("row_idx") === 0)
-      .select(col("printerInfo.status")).collect().head.getString(0)
-    assert(hit3 == "online")
-    // ...and a key whose rows are ALL unstamped still resolves to a real
-    // row (value-struct tie-break), never a null scan struct — a bare
-    // max_by over the stamp would have dropped every row here
-    val allNull = results.withColumn("scan_seq", lit(null).cast("long"))
-    val hit4 = ScanMerge(printers, allNull, selected, Some("scan_seq"))
-      .filter(col("group") === "Company_Grouped" && col("row_idx") === 0)
-      .select(col("printerInfo.status")).collect().head.getString(0)
-    assert(hit4 == "retry-won") // deterministic: max over the value struct
   }
 
   test("alerts merge: printerError family defaults to {Offline, critical}") {
