@@ -57,6 +57,16 @@ object Normalize {
       .otherwise("offline")
   }
 
+  /** Python `str.strip()`: removes ALL leading/trailing ASCII
+    * whitespace — \t \n \r \f \x0B as well as spaces; Spark's `trim`
+    * strips spaces only. Residual gap: Python also strips Unicode
+    * whitespace (U+00A0, U+2028, U+0085, ...) which Java \s does not
+    * match — switch to "(?U)\\s" if real inputs carry non-ASCII padding. */
+  def pyStrip(c: Column): Column = regexp_replace(c, "^\\s+|\\s+$", "")
+
+  /** Empty string → null (a failed `regexp_extract` reads ""). */
+  def nullIfEmpty(c: Column): Column = when(length(c) > 0, c)
+
   /** F5 `dash_if_blank`: null/blank → "-". Ref: update_from_json.py:60-65. */
   def dashIfBlank(c: Column): Column =
     when(c.isNull || trim(c.cast("string")) === "", "-")
@@ -156,16 +166,16 @@ object Normalize {
       .otherwise(translated)
   }
 
-  /** F13 OID structural parse: find marker subsequence in a dotted OID,
-    * emit (col = parts[i+4], row = parts[i+6]) — 1-based `array_position`.
-    * Ref: snmp_toner.py:35-59 (marker "43.11.1.1"). */
-  def oidColRow(oid: Column, markerHead: String = "43"): Column = {
+  /** F13 OID structural parse: find the full "43.11.1.1" marker in a
+    * dotted OID, emit (col = parts[i+4], row = parts[i+6]) — 1-based
+    * `array_position` of its "43"; null when the marker is absent, a
+    * null part when the OID ends early. Ref: snmp_toner.py:35-59. */
+  def oidColRow(oid: Column): Column = {
     val parts = split(oid, "\\.")
-    val i = array_position(parts, markerHead) // 1-based; 0 when absent
-    when(i > 0 && element_at(parts, (i + 1).cast("int")) === "11",
-      struct(
-        element_at(parts, (i + 4).cast("int")).try_cast("int").as("col"),
-        element_at(parts, (i + 6).cast("int")).try_cast("int").as("row")))
+    val i = array_position(parts, "43") // 1-based; 0 when absent
+    def p(off: Int): Column = try_element_at(parts, (i + off).cast("int"))
+    when(i > 0 && p(1) === "11" && p(2) === "1" && p(3) === "1",
+      struct(p(4).try_cast("int").as("col"), p(6).try_cast("int").as("row")))
       .otherwise(lit(null).cast("struct<col:int,row:int>"))
   }
 
@@ -178,7 +188,7 @@ object Normalize {
 
   /** F15 `_hr_bits_as_flags`: 15-bit hrPrinterDetectedErrorState mask →
     * array of set-flag names; severity critical iff offline(bit6) or
-    * serviceRequested(bit3) else warning (0 mask → empty, informational).
+    * serviceRequested(bit7) else warning (0 mask → empty, informational).
     * Ref: snmp_alerts.py:16-34,92-97,136-150. */
   val HrFlagNames: Seq[(Int, String)] = Seq(
     0 -> "lowPaper", 1 -> "noPaper", 2 -> "lowToner", 3 -> "noToner",

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Normalize
+import graft.sources.DocumentIngest
 
 /** Document-level enrichment joins (SURVEY.md §2.3 J1/J2, W1).
   *
@@ -15,34 +16,16 @@ import graft.functions.Normalize
   */
 object Enrich {
 
-  import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+  import org.apache.spark.sql.types.{DataType, StringType, StructField}
 
-  /** The storeInfo fields enrichment reads or writes. */
+  /** The storeInfo fields enrichment reads or writes: storeInfo is
+    * widened to them (`DocumentIngest.ensureStruct`) before any update. */
   private val StoreInfoFields: Seq[StructField] = {
     val descT = DataType.fromDDL(
       "struct<LineID:string,PrimaryDescription:string,SecondayDescription:string>")
     Seq("Manager", "Phone", "Location", "Postal").map(StructField(_, StringType)) ++
       Seq("firstDescription", "secondDescription").map(StructField(_, descT))
   }
-
-  private def nullStruct(fields: Seq[StructField]): Column =
-    struct(fields.map(f => lit(null).cast(f.dataType).as(f.name)): _*)
-
-  /** `ensure_printer_info`-style on-demand struct creation
-    * (core/printers.py:19-24 analogue for storeInfo): withField on a
-    * NULL struct returns null, so enrichment coalesces to an all-null
-    * struct of the document's storeInfo schema first. JSON inference
-    * only types the fields some record carries, so a storeInfo missing
-    * any of [[StoreInfoFields]] is widened with null fields — reading
-    * an absent field would fail analysis (FIELD_NOT_FOUND). */
-  private def siBase(df: DataFrame): Column =
-    df.schema.fields.find(_.name == "storeInfo").map(_.dataType) match {
-      case Some(t: StructType) =>
-        val base = coalesce(col("storeInfo"), nullStruct(t.fields.toSeq))
-        StoreInfoFields.filterNot(f => t.fieldNames.contains(f.name))
-          .foldLeft(base)((si, f) => si.withField(f.name, lit(null).cast(f.dataType)))
-      case _ => nullStruct(StoreInfoFields)
-    }
 
   /** J1 — employees → branches (core/enrich/employees.py:4-34):
     * left-join on trimmed id; NON-EMPTY-WINS update of
@@ -68,9 +51,10 @@ object Enrich {
     val isBranch = col("group") === "Branches_Grouped"
     def nonEmptyWins(newV: Column, oldV: Column): Column =
       when(length(trim(coalesce(newV, lit("")))) > 0, newV).otherwise(oldV)
-    val joined = printers.join(emp,
+    val widened = DocumentIngest.ensureStruct(printers, "storeInfo", StoreInfoFields)
+    val joined = widened.join(emp,
       isBranch && trim(col("ID").cast("string")) === col("emp_id"), "left")
-    val si = siBase(printers)
+    val si = DocumentIngest.structBase(widened, "storeInfo")
     val newManager = nonEmptyWins(col("emp_name"), si.getField("Manager"))
     val newPhone = nonEmptyWins(col("emp_phone"), si.getField("Phone"))
     joined
@@ -145,9 +129,10 @@ object Enrich {
       .withColumn("b_postal", postal)
       .withColumn("b_location", cleanAddr))
     val isBranch = col("group") === "Branches_Grouped"
-    val joined = printers.join(side,
+    val widened = DocumentIngest.ensureStruct(printers, "storeInfo", StoreInfoFields)
+    val joined = widened.join(side,
       isBranch && bidOf(col("ID")) === col("bid"), "left")
-    val si = siBase(printers)
+    val si = DocumentIngest.structBase(widened, "storeInfo")
     joined
       .withColumn("storeInfo",
         when(col("bid").isNotNull, si

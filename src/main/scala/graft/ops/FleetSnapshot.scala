@@ -65,7 +65,8 @@ object FleetSnapshot {
       .otherwise(lit(null).cast("string"))
   }
 
-  /** Printers (DocumentIngest.printers shape) → flat snapshot.
+  /** Printers (DocumentIngest.printers shape) → flat snapshot; a
+    * printerInfo field the register lacks reads null.
     * `keep` columns ride along in the same projection (e.g. storeInfo
     * fields a caller wants in the sheet) — a pass-through, never a
     * join. */
@@ -74,7 +75,7 @@ object FleetSnapshot {
     val carts = coalesce(pi.getField("cartridges"),
       expr("array()").cast("array<struct<cartridge:string,remaining_percent:string>>"))
     val colorCols = Colors.map(c => colorValue(carts, c).as(c))
-    printers.select(
+    DocumentIngest.ensureStruct(printers, "printerInfo", DocumentIngest.PrinterInfoFields).select(
       Seq(col("group"), col("row_idx"),
         Normalize.canonicalizeId(col("ID")).as("id"),
         Normalize.statusOnlineOffline(pi.getField("status")).as("Status"))

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.sources.DocumentIngest
 
@@ -19,11 +19,14 @@ import graft.sources.DocumentIngest
   * the poll's mapPartitions stage. */
 object ScanMerge {
 
-  private def piBaseOf(printers: DataFrame): Column = {
-    val piType = printers.schema("printerInfo").dataType.asInstanceOf[StructType]
-    coalesce(col("printerInfo"),
-      struct(piType.fields.toSeq.map(f => lit(null).cast(f.dataType).as(f.name)): _*))
-  }
+  /** printerInfo widened to the canonical fields: a register fresh from
+    * an Excel import has none, and JSON inference types only the fields
+    * some record carries. */
+  private def withPi(printers: DataFrame): DataFrame =
+    DocumentIngest.ensureStruct(printers, "printerInfo", DocumentIngest.PrinterInfoFields)
+
+  private def piField(printers: DataFrame, name: String): DataType =
+    printers.schema("printerInfo").dataType.asInstanceOf[StructType](name).dataType
 
   /** One scan row per device: the reference processes each printer's IP
     * exactly once (a per-device call, not a result TABLE), so a results
@@ -47,10 +50,10 @@ object ScanMerge {
     * by normalized IP, then rewrite printerInfo via `hit` (a scan row
     * answered) or `miss` (selected but nothing came back — the
     * reference's per-printer except-branch). Unselected rows keep their
-    * printerInfo verbatim. */
+    * printerInfo verbatim. `printers` is already [[withPi]]-widened. */
   private def writeBack(printers: DataFrame, r0: DataFrame, selected: Column)(
       hit: Column => Column, miss: Column => Column): DataFrame = {
-    val piBase = piBaseOf(printers)
+    val piBase = DocumentIngest.structBase(printers, "printerInfo")
     val r = onePerIp(r0)
     val scanCols = r.columns.toSeq
     printers
@@ -71,11 +74,11 @@ object ScanMerge {
     *                 --only-ip mode selects by IP equality ALONE — no
     *                 type screen — so pass only the ip predicate there) */
   def apply(printers: DataFrame, results: DataFrame, selected: Column): DataFrame = {
-    val piType = printers.schema("printerInfo").dataType.asInstanceOf[StructType]
-    val cartsType = piType("cartridges").dataType
+    val pw = withPi(printers)
+    val cartsType = piField(pw, "cartridges")
     val r = results.select(col("ip").as("scan_ip"),
       col("status").as("scan_status"), col("cartridges").as("scan_carts"))
-    writeBack(printers, r, selected)(
+    writeBack(pw, r, selected)(
       hit = _.withField("status", col("scan_status"))
         .withField("cartridges", col("scan_carts").cast(cartsType)),
       miss = _.withField("status", lit("offline"))
@@ -123,9 +126,9 @@ object ScanMerge {
     * @param web      which family's probe/write/empty rules apply */
   def tonerType(printers: DataFrame, results: DataFrame, selected: Column,
       web: Boolean): DataFrame = {
-    val piType = printers.schema("printerInfo").dataType.asInstanceOf[StructType]
-    val ttType = piType("tonerType").dataType
-    val piBase = piBaseOf(printers)
+    val pw = withPi(printers)
+    val ttType = piField(pw, "tonerType")
+    val piBase = DocumentIngest.structBase(pw, "printerInfo")
     val r = onePerIp(results.select(col("ip").as("scan_ip"),
       (if (web) DocumentIngest.unifyTonerType(col("tid")) else col("codes"))
         .cast(ttType).as("scan_tt")))
@@ -142,7 +145,7 @@ object ScanMerge {
       if (web) tt.isNotNull && size(tt) === 1 &&
         get(tt, lit(0)).isNotNull && get(tt, lit(0)) =!= ""
       else tt.isNotNull && size(tt) > 0
-    val sel = printers
+    val sel = pw
       .withColumn("__sel", selected)
       .withColumn("__t", trim(coalesce(col("Type").cast("string"), lit(""))))
       .withColumn("__gr", grpRank)
@@ -162,7 +165,7 @@ object ScanMerge {
       .join(r, col("rep_ip") === col("scan_ip"), "left")
       .select(col("p_type"),
         coalesce(col("probe_tt"), col("scan_tt"), emptyPreset).as("preset"))
-    printers
+    pw
       .withColumn("__sel", selected)
       .withColumn("__t", trim(coalesce(col("Type").cast("string"), lit(""))))
       .join(broadcast(presets), col("__t") === col("p_type") && col("__sel"),
@@ -187,7 +190,7 @@ object ScanMerge {
       struct(p.as("problem"), s.as("severity"))
     val r = results.select(col("ip").as("scan_ip"),
       col("problem").as("scan_problem"), col("severity").as("scan_severity"))
-    writeBack(printers, r, selected)(
+    writeBack(withPi(printers), r, selected)(
       hit = _.withField("printerError",
         pe(col("scan_problem"), col("scan_severity"))),
       miss = _.withField("printerError", pe(lit("Offline"), lit("critical"))))

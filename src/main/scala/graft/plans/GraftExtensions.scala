@@ -1,18 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** Engine extension point (SURVEY.md §2.8): registers the custom
-  * generators as SQL-callable functions. Two install paths:
-  *
-  *  - `spark.sql.extensions=graft.plans.GraftExtensions` at session
-  *    build (the idiomatic cluster deployment), or
-  *  - `GraftExtensions.register(spark)` on a live session (tests,
-  *    notebooks).
+  * generators as SQL-callable functions. One install path, at session
+  * build: `graft.spark.Sessions.builder` passes it to `withExtensions`
+  * for every engine session (a cluster names the same class in
+  * `spark.sql.extensions`).
   *
   * Usage: `SELECT doc_id, t.* FROM payloads
   *         LATERAL VIEW json_alert_extract(body) t` or in a select list
@@ -150,10 +147,4 @@ object GraftExtensions {
         s"bloom_build sizes must be integral literals, got $other")
     }
   }
-
-  /** Late registration on an existing session. */
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
 }

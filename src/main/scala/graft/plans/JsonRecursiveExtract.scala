@@ -11,6 +11,8 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.Normalize
+
 /** Schema-free recursive JSON walkers (SURVEY.md §2.6 F24/F25, §2.8) —
   * the one reference behavior Spark's built-ins genuinely cannot
   * express: the payload's shape is unknown (any nesting of
@@ -62,6 +64,14 @@ abstract class JsonWalkGenerator
 
   protected def walk(root: JsonNode): Iterator[InternalRow]
 
+  /** Python str(v) for the accepted (str | int) scalars, where bool <:
+    * int: True→"True", ints verbatim, strings verbatim; else null. */
+  protected def strIntOf(n: JsonNode): String =
+    if (n.isTextual) n.asText()
+    else if (n.isBoolean) { if (n.asBoolean()) "True" else "False" }
+    else if (n.isIntegralNumber) n.asText()
+    else null
+
   protected def utf8(s: String): UTF8String =
     if (s == null) null else UTF8String.fromString(s)
 }
@@ -76,7 +86,7 @@ abstract class JsonWalkGenerator
   * Output: (path, severity, code, description). */
 case class JsonAlertExtract(child: Expression) extends JsonWalkGenerator {
 
-  private val CodeRe = "\\b[A-Z]\\d-\\d{3,5}\\b".r
+  private val CodeRe = Normalize.EwsCodeRe.r
   private val DescHints = Seq("desc", "message", "detail", "reason")
 
   override def elementSchema: StructType = StructType(Seq(
@@ -92,13 +102,6 @@ case class JsonAlertExtract(child: Expression) extends JsonWalkGenerator {
     def emit(path: String, sev: String, code: String, desc: String): Unit =
       if (seen.add((sev, code, desc)))
         out += InternalRow(utf8(path), utf8(sev), utf8(code), utf8(desc))
-    // Python str(v) for the accepted scalar types (str | int, where
-    // bool <: int): True→"True", ints verbatim, strings verbatim.
-    def strIntOf(n: JsonNode): String =
-      if (n.isTextual) n.asText()
-      else if (n.isBoolean) { if (n.asBoolean()) "True" else "False" }
-      else if (n.isIntegralNumber) n.asText()
-      else null
     def rec(node: JsonNode, path: String): Unit = {
       if (node.isObject) {
         // kl = {k.lower(): k}: duplicate lowercased keys collapse with
@@ -209,7 +212,7 @@ case class JsonPrinterFinder(child: Expression) extends JsonWalkGenerator {
   * Output: (idx, code, contextual). */
 case class JsonTonerIds(child: Expression) extends JsonWalkGenerator {
 
-  private val IdRe = "(?:W\\d{4}[A-Z](?:X)?|MLT-[A-Z]\\d{3,5}[A-Z]*|[A-Z]{2}\\d{3}[A-Z])".r
+  private val IdRe = Normalize.TonerIdRes.mkString("(?:", "|", ")").r
   private val ExactKeys = Set("id", "model", "name", "partno", "part_no", "pn")
 
   override def elementSchema: StructType = StructType(Seq(
@@ -224,12 +227,6 @@ case class JsonTonerIds(child: Expression) extends JsonWalkGenerator {
     val out = mutable.ArrayBuffer.empty[InternalRow]
     def add(code: String, contextual: Boolean): Unit =
       out += InternalRow(out.length, utf8(code), contextual)
-    // Python str(v) for the gated (str | int) scalars
-    def strIntOf(n: JsonNode): String =
-      if (n.isTextual) n.asText()
-      else if (n.isBoolean) { if (n.asBoolean()) "True" else "False" }
-      else if (n.isIntegralNumber) n.asText()
-      else null
     def rec(node: JsonNode, ctx: String): Unit = {
       if (node.isObject) {
         val it = node.properties().iterator()

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.plans.GraftExtensions
 import graft.sources.{DeterministicSnmpFake, DevicePoll, EwsAlerts, PayloadParsers,
   SnmpPayload}
 
@@ -229,7 +228,6 @@ object ParserQueries {
       |  SELECT doc_id, 'unknown' AS severity, '' AS code, msg AS description FROM base
       |)
       |ORDER BY doc_id, severity, code, description""".stripMargin) { (s, d) =>
-    GraftExtensions.register(s)
     val json = concat(
       lit("{\"alerts\": [{\"Severity\": \""),
       concat(lit("sev"), (col("doc_id") % 3).cast("string")),
@@ -372,7 +370,7 @@ object ParserQueries {
         .when(pk % 4 === 2,
           concat(lit("yellow HP W"), (pk % 9000 + 1000).cast("string"), lit("A")))
         .otherwise("magenta mystery MX-500").as("description"))
-    SnmpPayload.tonerTypeCodes(supplies, "ip")
+    SnmpPayload.tonerTypeCodes(supplies)
       .select(col("ip"), concat_ws(",", col("codes")).as("codes"))
       .orderBy("ip")
   }
@@ -397,7 +395,6 @@ object ParserQueries {
       |  END AS toner_id
       |FROM base
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    GraftExtensions.register(s)
     val json = concat(
       lit("{\"supplies\": {\"partno\": \""),
       when(col("doc_id") % 3 === 0,
@@ -501,7 +498,6 @@ object ParserQueries {
       |    concat('D', CAST(doc_id % 5 AS VARCHAR)), NULL FROM documents
       |)
       |ORDER BY doc_id, ord""".stripMargin) { (s, d) =>
-    GraftExtensions.register(s)
     val json = concat(
       lit("{\"ID\": "), col("doc_id").cast("string"),
       lit(", \"printerInfo\": {\"status\": \"ready\"}, \"fleet\": [" +

@@ -2258,7 +2258,6 @@ object TextQueries {
     * FPR. */
   val t39BloomDecontaminate: QuerySpec = QuerySpec.sql(
     "t39_bloom_decontaminate", DecontaminationOracleSql) { (s, d) =>
-    graft.plans.GraftExtensions.register(s)
     // NO checkpoint of this frame: it is corpus-sized, and
     // materializing it OOMed the ×100 ScaleCheck point — t12's rule
     // ("re-reading pruned parquet is cheaper than materializing a

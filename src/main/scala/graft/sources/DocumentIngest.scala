@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.Normalize
+
 /** Printers-document ingest (SURVEY.md §2 P1/P2/U1, S2).
   *
   * The reference's central dataset is one JSON document with two group
@@ -38,14 +40,18 @@ object DocumentIngest {
     * independently, and the reference's data makes them genuinely
     * diverge (dual-typed `tonerType`, int-vs-string `ID`) — so each
     * frame is harmonized to the canonical types BEFORE the union:
-    * `ID` → string, `printerInfo.tonerType` → array<string>. */
+    * `ID` → string, `printerInfo.tonerType` → array<string>. A group
+    * whose array holds no records (inference types `[]` as
+    * array<string>) contributes no rows. */
   def printers(doc: DataFrame): DataFrame = {
-    val frames = GroupKeys.filter(doc.columns.contains).map { g =>
+    val recordGroups = GroupKeys.filter(g => doc.schema.find(_.name == g).exists(
+      _.dataType match { case ArrayType(_: StructType, _) => true; case _ => false }))
+    val frames = recordGroups.map { g =>
       harmonize(doc
         .select(posexplode(col(g)).as(Seq("row_idx", "rec")))
         .select(lit(g).as("group"), col("row_idx"), col("rec.*")))
     }
-    require(frames.nonEmpty, s"document has none of $GroupKeys")
+    require(frames.nonEmpty, s"document has no printer records under $GroupKeys")
     frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
@@ -67,6 +73,33 @@ object DocumentIngest {
       case _ => None
     }
 
+  /** The printerInfo fields the fleet operators read or write. */
+  val PrinterInfoFields: Seq[StructField] = StructType.fromDDL(
+    "status string, cartridges array<struct<cartridge:string,remaining_percent:string>>, " +
+      "printerError struct<problem:string,severity:string>, tonerType array<string>").fields.toSeq
+
+  /** `ensure_printer_info`-style widening (core/printers.py:19-24) for
+    * any record struct: JSON inference only types the fields some record
+    * carries, and reading an absent field fails analysis
+    * (FIELD_NOT_FOUND), so `df`'s struct column `name` gains each of
+    * `fields` it lacks as a null field, appended; an absent or
+    * non-struct column becomes a null struct of `fields`. A record
+    * without the struct stays null; a complete struct leaves `df` as is. */
+  def ensureStruct(df: DataFrame, name: String, fields: Seq[StructField]): DataFrame =
+    df.schema.find(_.name == name).map(_.dataType) match {
+      case Some(t: StructType) =>
+        fields.filterNot(f => t.fieldNames.contains(f.name)).foldLeft(df)((d, f) =>
+          d.withColumn(name, col(name).withField(f.name, lit(null).cast(f.dataType))))
+      case _ => df.withColumn(name, lit(null).cast(StructType(fields)))
+    }
+
+  /** `df`'s struct column `name` with a null struct read as all-null
+    * fields — the base `withField` writes onto (it leaves null null). */
+  def structBase(df: DataFrame, name: String): Column = {
+    val t = df.schema(name).dataType.asInstanceOf[StructType]
+    coalesce(col(name), struct(t.fields.toSeq.map(f => lit(null).cast(f.dataType).as(f.name)): _*))
+  }
+
   /** Unify the dual-typed `tonerType` (SURVEY.md §1.2 hard part 1):
     * the SNMP path writes array<string>
     * (plugins/tonerType/toner_type_snmp.py:49), the web path a plain
@@ -86,10 +119,10 @@ object DocumentIngest {
     * 38-42 writes tmp-then-rename; here: write to a tmp file, then
     * atomic move). Group arrays are rebuilt in `row_idx` order so a
     * read→write round-trip is stable; `group`/`row_idx` bookkeeping
-    * columns are folded away. The document is one JSON object by
-    * contract (a fleet register, not a fact table) — the final
-    * assembly is intentionally driver-side; everything upstream of it
-    * is distributed. */
+    * columns are folded away; a group with no rows is written as `[]`.
+    * The document is one JSON object by contract (a fleet register,
+    * not a fact table) — the final assembly is intentionally
+    * driver-side; everything upstream of it is distributed. */
   def writeDocument(printers: DataFrame, path: String): Unit = {
     import org.apache.spark.sql.functions.{to_json, sort_array, collect_list, struct}
     val recCols = printers.columns.filterNot(Seq("group", "row_idx").contains)
@@ -103,7 +136,8 @@ object DocumentIngest {
           Map("ignoreNullFields" -> "true")).as("recs_json"))
       .collect()
       .map(r => r.getString(0) -> r.getString(1))
-    val body = grouped.sortBy { case (g, _) => GroupKeys.indexOf(g) }
+    val empty = GroupKeys.filterNot(grouped.map(_._1).contains).map(_ -> "[]")
+    val body = (grouped ++ empty).sortBy { case (g, _) => GroupKeys.indexOf(g) }
       .map { case (g, js) => s""""$g": $js""" }
       .mkString("{\n", ",\n", "\n}")
     val target = java.nio.file.Paths.get(path)
@@ -145,15 +179,9 @@ object DocumentIngest {
           col(c).isNotNull && col(c) =!= 0
         case _ => col(c).isNotNull && col(c).cast(StringType) =!= ""
       }
-      // str(v).strip() removes ALL ASCII whitespace (\t \n \r \f \x0B),
-      // not just spaces — Spark's trim() is space-only, so a
-      // "\t10.0.0.6\n" cell would diverge under it (p5_only_ip
-      // hash-gates this). Residual gap, same as TicketSearch.pyStrip:
-      // Python also strips Unicode whitespace (U+00A0, U+2028, U+0085,
-      // ...) which Java \s does not match; switch to "(?U)\\s" if
-      // real-world IP cells ever carry non-ASCII padding.
-      when(truthy,
-        regexp_replace(col(c).cast(StringType), "^\\s+|\\s+$", ""))
+      // str(v).strip(): a "\t10.0.0.6\n" cell must match (p5_only_ip
+      // hash-gates this)
+      when(truthy, Normalize.pyStrip(col(c).cast(StringType)))
     }
     coalesce(picks :+ lit(null).cast(StringType): _*)
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Normalize
+import graft.functions.Normalize.nullIfEmpty
 
 /** EWS active-alert processing (SURVEY.md §2.1 S7/S10/S11, §2.4 A4/A5,
   * §2.6 F17/F18/F19/F26): the relational semantics downstream of the
@@ -27,8 +28,6 @@ object EwsAlerts {
   private val CellPat = "(?s)<div[^>]*x-grid3-cell-inner[^>]*>(.*?)</div>"
   private val TdPat = "(?s)<td[^>]*>(.*?)</td>"
 
-  private def nz(c: Column): Column = when(length(c) > 0, c)
-
   private def cellText(c: Column): Column =
     trim(regexp_replace(c, "<[^>]+>", ""))
 
@@ -39,13 +38,12 @@ object EwsAlerts {
     * the desc, stripped from its head; severity = img alt, else the
     * shortest non-empty cell, else "unknown"; header rows (mentioning
     * both "description" and "status code") are skipped; first-seen
-    * dedup on the full triple. Output: (key, alert_idx, severity,
-    * status_code, description). */
-  def alertsFromHtml(payloads: DataFrame, keyCol: String,
-      htmlCol: String = "html"): DataFrame = {
-    val html = col(htmlCol)
+    * dedup on the full triple. Reads the page from the `html` column.
+    * Output: (key, alert_idx, severity, status_code, description). */
+  def alertsFromHtml(payloads: DataFrame, keyCol: String): DataFrame = {
+    val html = col("html")
     // rows scoped to the grid body when the ExtJS layout is present
-    val gridBody = nz(regexp_extract(html, "(?s)<div[^>]*x-grid3-body.*", 0))
+    val gridBody = nullIfEmpty(regexp_extract(html, "(?s)<div[^>]*x-grid3-body.*", 0))
     val gridRows = regexp_extract_all(gridBody, lit(RowPat), lit(0))
     val trRows = regexp_extract_all(html, lit(TrPat), lit(0))
     val rows = when(coalesce(size(gridRows), lit(0)) > 0, gridRows)
@@ -61,7 +59,7 @@ object EwsAlerts {
       // max(cells, key=len): first maximal wins
       val desc0 = aggregate(cells, lit(""),
         (acc, x) => when(length(x) > length(acc), x).otherwise(acc))
-      val code = regexp_extract(desc0, Normalize.EwsCodeRe, 0)
+      val code = Normalize.extractEwsCode(desc0)
       // desc.startswith(code) → drop the code head + lstrip(" :.- ")
       val desc = when(length(code) > 0 && desc0.startsWith(code),
         regexp_replace(desc0.substr(length(code) + 1, lit(Int.MaxValue)),
@@ -71,7 +69,7 @@ object EwsAlerts {
       // min(short, key=len): first minimal wins
       val shortest = aggregate(nonEmptyCells, lit(null).cast("string"),
         (acc, x) => when(acc.isNull || length(x) < length(acc), x).otherwise(acc))
-      val sev = coalesce(nz(alt), shortest, lit("unknown"))
+      val sev = coalesce(nullIfEmpty(alt), shortest, lit("unknown"))
       when(coalesce(size(cells0), lit(0)) > 0 && !isHeader &&
         (length(desc) > 0 || length(code) > 0),
         struct(sev.as("severity"), code.as("status_code"), desc.as("description")))
@@ -115,8 +113,8 @@ object EwsAlerts {
       .select(col(keyCol),
         when(length(coalesce(col("top.status_code"), lit(""))) > 0,
           col("top.status_code"))
-          .otherwise(regexp_extract(trim(coalesce(col("top.description"), lit(""))),
-            Normalize.EwsCodeRe, 0)).as("code"),
+          .otherwise(Normalize.extractEwsCode(trim(coalesce(col("top.description"), lit("")))))
+          .as("code"),
         trim(coalesce(col("top.description"), lit(""))).as("description"),
         col("top.severity").as("severity_raw"))
   }

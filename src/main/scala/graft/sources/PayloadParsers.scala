@@ -5,31 +5,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Normalize
+import graft.functions.Normalize.nullIfEmpty
 
 /** Raw-payload parsers for the remaining device-scan sources
   * (SURVEY.md §2.1 S8/S9/S11, §2.6 F23/F26/F27). The network fetch is
   * DevicePoll's seam; these transform captured payload columns into
-  * relational rows with pure built-ins — xpath for XML, regex for the
-  * fixed Brother HTML layout, from_json over both catalog shapes. All
-  * scan-local, codegen-friendly, zero shuffle. */
+  * relational rows — the `xml_local_records`/`xml_first_local_text`
+  * generators (graft.plans) for XML, built-in regex for the fixed
+  * Brother HTML layout, from_json over the catalog shapes. All
+  * scan-local, zero shuffle. */
 object PayloadParsers {
 
   // ---- S8/F27: LEDM XML (adapters/ledm_client.py:19-44,96-170) ----
-
-  /** Namespace-insensitive first non-blank text among candidate tag
-    * names in DOCUMENT order — `_text_of_first` (ledm_client.py:35-44)
-    * scans the tree once and takes the first element matching ANY
-    * candidate, not the first candidate that answers anywhere. Pure
-    * built-ins (one union xpath); for the exact ElementTree `.text`
-    * semantics use `xml_first_local_text` (graft.plans). */
-  def xmlLocalText(xml: Column, tagNames: Seq[String]): Column = {
-    val pred = tagNames.map(t => s"local-name()='$t'").mkString(" or ")
-    val texts = xpath(xml, lit(s"//*[$pred]/text()"))
-    trim(get(filter(texts, s => length(trim(s)) > 0), lit(0)))
-  }
-
-  private def registerXmlFns(payloads: DataFrame): Unit =
-    graft.plans.GraftExtensions.register(payloads.sparkSession)
 
   /** `problem_from_status` (ledm_client.py:111-128): first non-blank
     * among LocString/StatusString/StatusMessage/Reason/DetailedReason/
@@ -58,7 +45,6 @@ object PayloadParsers {
     * Code/EventCode/ID/ErrorCode and Description/EventDescription/
     * Name/Reason, each `_text_of_first` within the Event subtree. */
   def ledmEvents(payloads: DataFrame, keyCol: String, xmlCol: String = "xml"): DataFrame = {
-    registerXmlFns(payloads)
     payloads.selectExpr(s"`$keyCol`",
       s"""xml_local_records(`$xmlCol`, 'Event', 'Severity',
          |'Code,EventCode,ID,ErrorCode',
@@ -70,7 +56,6 @@ object PayloadParsers {
     * severity defaults to "Info", code candidates include the
     * HP-specific ProductStatusAlertID/StringId. */
   def ledmAlerts(payloads: DataFrame, keyCol: String, xmlCol: String = "xml"): DataFrame = {
-    registerXmlFns(payloads)
     payloads.selectExpr(s"`$keyCol`",
       s"""xml_local_records(`$xmlCol`, 'Alert', 'Severity',
          |'ProductStatusAlertID,StringId,ID,Code',
@@ -134,15 +119,15 @@ object PayloadParsers {
     * election wins, then status-doc alert election, then
     * problem_from_status, then "Unknown"; severity = event → alert →
     * derived-from-problem; normalize; blank-fill Normal/informational.
-    * Event and alert severities take precedence over text-derived. */
-  def ledmProblemSeverity(payloads: DataFrame, keyCol: String,
-      statusCol: String = "status_xml", eventsCol: String = "events_xml"): DataFrame = {
-    val ev = ledmBestEvents(
-      ledmEvents(payloads.select(col(keyCol), col(eventsCol)), keyCol, eventsCol), keyCol)
-    val al = ledmBestAlerts(
-      ledmAlerts(payloads.select(col(keyCol), col(statusCol)), keyCol, statusCol), keyCol)
+    * Event and alert severities take precedence over text-derived.
+    * Reads the `status_xml` and `events_xml` documents; a device with
+    * no EventTable payload has a null `events_xml`, which elects no
+    * event and leaves the status-doc chain. */
+  def ledmProblemSeverity(payloads: DataFrame, keyCol: String): DataFrame = {
+    val ev = ledmBestEvents(ledmEvents(payloads, keyCol, "events_xml"), keyCol)
+    val al = ledmBestAlerts(ledmAlerts(payloads, keyCol, "status_xml"), keyCol)
     val joined = payloads
-      .withColumn("st_problem", ledmProblemFromStatus(col(statusCol)))
+      .withColumn("st_problem", ledmProblemFromStatus(col("status_xml")))
       .join(ev, Seq(keyCol), "left")
       .join(al, Seq(keyCol), "left")
     // Python `or` chain: empty strings are falsy, but the election and
@@ -157,26 +142,7 @@ object PayloadParsers {
       .withColumn("severity", coalesce(when(length(ns) > 0, ns), lit("informational")))
   }
 
-  /** Status-doc-only convenience (no EventTable payload): alerts +
-    * problem_from_status through the same chain. */
-  def ledmStatus(payloads: DataFrame, keyCol: String, xmlCol: String = "xml"): DataFrame = {
-    val al = ledmBestAlerts(
-      ledmAlerts(payloads.select(col(keyCol), col(xmlCol)), keyCol, xmlCol), keyCol)
-    val joined = payloads
-      .withColumn("st_problem", ledmProblemFromStatus(col(xmlCol)))
-      .join(al, Seq(keyCol), "left")
-    val problem0 = coalesce(col("al_problem"), col("st_problem"), lit("Unknown"))
-    val severity0 = coalesce(col("al_severity"),
-      Normalize.severityFromProblem(problem0))
-    val (np, ns) = normalizeProblemSeverity(problem0, severity0)
-    joined
-      .withColumn("problem", coalesce(when(length(np) > 0, np), lit("Normal")))
-      .withColumn("severity", coalesce(when(length(ns) > 0, ns), lit("informational")))
-  }
-
   // ---- S9/F23/F26: Brother ink-level HTML (brother_toner_web.py:38-100) ----
-
-  private def nzs(c: Column): Column = when(length(c) > 0, c)
 
   /** Faithful fixed-layout scrape (brother_toner_web.py:63-100): the
     * `#inkLevel` (else `#inkLevelMono`) table needs ≥3 rows; bar
@@ -185,13 +151,12 @@ object PayloadParsers {
     * labels from row 2's `<th>` texts, normalized with nulls REMOVED
     * before the positional zip (zip truncates to the shorter list).
     * A td with no readable height still emits its cartridge with a
-    * null percent. */
-  def brotherInkLevels(payloads: DataFrame, keyCol: String,
-      htmlCol: String = "html"): DataFrame = {
-    val html = col(htmlCol)
+    * null percent. Reads the page from the `html` column. */
+  def brotherInkLevels(payloads: DataFrame, keyCol: String): DataFrame = {
+    val html = col("html")
     val table = coalesce(
-      nzs(regexp_extract(html, "(?s)<table[^>]*id=\"inkLevel\"[^>]*>.*?</table>", 0)),
-      nzs(regexp_extract(html, "(?s)<table[^>]*id=\"inkLevelMono\"[^>]*>.*?</table>", 0)))
+      nullIfEmpty(regexp_extract(html, "(?s)<table[^>]*id=\"inkLevel\"[^>]*>.*?</table>", 0)),
+      nullIfEmpty(regexp_extract(html, "(?s)<table[^>]*id=\"inkLevelMono\"[^>]*>.*?</table>", 0)))
     val rows = regexp_extract_all(table, lit("(?s)<tr[^>]*>.*?</tr>"), lit(0))
     val tds = regexp_extract_all(get(rows, lit(1)),
       lit("(?s)<td[^>]*>.*?</td>"), lit(0))
@@ -199,13 +164,13 @@ object PayloadParsers {
       lit("(?s)<th[^>]*>.*?</th>"), lit(0))
     // first digit run of an attr value / style height, reference order
     def attrDigits(frag: Column, attr: String): Column =
-      nzs(regexp_extract(
+      nullIfEmpty(regexp_extract(
         regexp_extract(frag, s"(?i)$attr\\s*=\\s*(\"[^\"]*\"|[^\\s>]+)", 1),
         "(\\d+)", 1))
     def styleDigits(frag: Column): Column =
-      nzs(regexp_extract(frag, "(?i)height\\s*:\\s*(\\d+)", 1))
+      nullIfEmpty(regexp_extract(frag, "(?i)height\\s*:\\s*(\\d+)", 1))
     val heights = transform(tds, td => {
-      val img = nzs(regexp_extract(td, "(?s)<img[^>]*>", 0))
+      val img = nullIfEmpty(regexp_extract(td, "(?s)<img[^>]*>", 0))
       val tdOpen = regexp_extract(td, "(?s)^<td[^>]*>", 0)
       coalesce(attrDigits(img, "height"), styleDigits(img),
         attrDigits(tdOpen, "height"), styleDigits(tdOpen))
@@ -243,9 +208,10 @@ object PayloadParsers {
     * lands a normalized (code, status, info) table — code stripped and
     * non-empty, status stripped+UPPER defaulting to "INFO", info
     * stripped defaulting to "". Duplicate codes: last wins (the
-    * reference builds a dict). Ready to broadcast into J6. */
-  def codeCatalog(raw: DataFrame, jsonCol: String = "json"): DataFrame = {
-    val t = trim(col(jsonCol))
+    * reference builds a dict). Reads the payload from the `json`
+    * column. Ready to broadcast into J6. */
+  def codeCatalog(raw: DataFrame): DataFrame = {
+    val t = trim(col("json"))
     val wrapped = when(t.startsWith("{"), from_json(t,
       StructType(Seq(StructField("items", ItemSchema)))).getField("items"))
     val listArr = coalesce(when(t.startsWith("["), from_json(t, ItemSchema)), wrapped)
@@ -265,7 +231,7 @@ object PayloadParsers {
       .where(col("code") =!= "")
       .groupBy("code")
       .agg(max(struct(col("pos"),
-        coalesce(nzs(upper(trim(coalesce(col("status"), lit(""))))), lit("INFO"))
+        coalesce(nullIfEmpty(upper(trim(coalesce(col("status"), lit(""))))), lit("INFO"))
           .as("status"),
         trim(coalesce(col("info"), lit(""))).as("info"))).as("m"))
       .select(col("code"), col("m.status"), col("m.info"))

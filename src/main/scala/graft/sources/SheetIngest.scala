@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import graft.sources.SideTables.headerNorm
+
 /** Excel-register ingest (SURVEY.md §2.1 S1 + §2.4 A12). The zero-
   * egress build has no XLSM reader; sheets land as positional row
   * tables (array of cell strings per row — a CSV/parquet landing zone),
@@ -31,17 +33,14 @@ object SheetIngest {
   val BranchesSpec: SheetSpec = SheetSpec(
     Seq("ID", "Name", "Printer IP", "BO IP", "Type", "Serial", "Comment"), "ID")
 
-  private def norm(s: String): String =
-    Option(s).getOrElse("").trim.toLowerCase.replaceAll("\\s+", " ")
-
   /** A12 — elect the header row: score = #cells matching expected
     * headers; the key column must be present; argmax (first on ties). */
   def electHeader(rows: Seq[Seq[String]], spec: SheetSpec): Option[Int] = {
-    val expected = spec.keys.map(norm).toSet
+    val expected = spec.keys.map(headerNorm).toSet
     val scored = rows.take(20).zipWithIndex.map { case (cells, i) =>
-      val normed = cells.map(norm)
+      val normed = cells.map(headerNorm)
       val score = normed.count(expected.contains)
-      val hasKey = normed.contains(norm(spec.keyColumn))
+      val hasKey = normed.contains(headerNorm(spec.keyColumn))
       (i, score, hasKey)
     }
     scored.filter(_._3) match {
@@ -63,7 +62,7 @@ object SheetIngest {
       .getOrElse(throw new IllegalArgumentException(
         s"no header row found (key '${spec.keyColumn}' absent in first 20 rows)"))
     val headerRowIdx = head(headerIdx)._1
-    val header = head(headerIdx)._2.map(norm)
+    val header = head(headerIdx)._2.map(headerNorm)
 
     // wanted key → source position: by normalized name within the
     // spec's column limit, each source column claimable ONCE, else the
@@ -72,7 +71,7 @@ object SheetIngest {
     val headerLimited = header.take(spec.keys.length)
     val taken = scala.collection.mutable.Set.empty[Int]
     val positions = spec.keys.zipWithIndex.map { case (k, pos) =>
-      val target = norm(k)
+      val target = headerNorm(k)
       val byName = headerLimited.zipWithIndex.collectFirst {
         case (h, i) if h == target && !taken.contains(i) => i
       }

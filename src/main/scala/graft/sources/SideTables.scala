@@ -16,8 +16,9 @@ import org.apache.spark.sql.types.{LongType, StringType}
   */
 object SideTables {
 
-  private def headerNorm(s: String): String =
-    s.trim.toLowerCase.replaceAll("\\s+", " ")
+  /** Header match key: trim, lower, collapse whitespace; null reads "". */
+  private[sources] def headerNorm(s: String): String =
+    Option(s).getOrElse("").trim.toLowerCase.replaceAll("\\s+", " ")
 
   /** Rename duplicate headers positionally: second occurrence of `x`
     * becomes `x_2`, third `x_3`… — duplicates counted on the TRIMMED

@@ -15,9 +15,6 @@ import graft.functions.Normalize
   * combinable, no cross-device data movement. */
 object SnmpAlerts {
 
-  val AlertTableRoot = "1.3.6.1.2.1.43.18.1.1"
-  val HrErrorStateBase = "1.3.6.1.2.1.25.3.5.1.2"
-
   /** Alert table rows (snmp_alerts.py:99-134): col = parts[-2],
     * row = int(parts[-1]); severity/group/groupidx/code keep only
     * int-parseable values (a failed parse leaves the key ABSENT, not
@@ -78,7 +75,8 @@ object SnmpAlerts {
   /** `_snmp_hr_errorstate` (snmp_alerts.py:136-150): the FIRST
     * int-parseable value under the hr base decides — empty flag set →
     * NO RESULT (the loop returns None without scanning further); else
-    * flags joined ", " with critical iff offline/serviceRequested.
+    * flags joined ", " with F15's severity (critical iff
+    * offline/serviceRequested, else warning).
     * Walk order is approximated by the numeric OID suffix. */
   def hrErrorState(walk: DataFrame, keyCol: String = "ip"): DataFrame = {
     val parts = split(col("oid"), "\\.")
@@ -94,9 +92,7 @@ object SnmpAlerts {
       .where(size(col("flags")) > 0)
       .select(col(keyCol),
         array_join(col("flags"), ", ").as("message"),
-        when(array_contains(col("flags"), "offline") ||
-          array_contains(col("flags"), "serviceRequested"), "critical")
-          .otherwise("warning").as("severity"))
+        Normalize.hrSeverity(col("bits")).as("severity"))
   }
 
   /** `process_snmp_alerts` (snmp_alerts.py:181-190): alert election

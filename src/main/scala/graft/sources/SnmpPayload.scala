@@ -37,16 +37,11 @@ object SnmpPayload {
 
   /** Supplies table: OID triples → one row per (ip, rowIdx) with the
     * reference's column set (A1 pivot; snmp_toner.py:91-105). */
-  def suppliesTable(walk: DataFrame): DataFrame = {
-    val parts = split(col("oid"), "\\.")
-    val i = array_position(parts, lit("43"))
-    def p(off: Int): Column = element_at(parts, (i + off).cast("int"))
+  def suppliesTable(walk: DataFrame): DataFrame =
     walk
-      .where(i > 0 && p(1) === "11" && p(2) === "1" && p(3) === "1")
-      .select(col("ip"),
-        p(4).try_cast("int").as("colId"),
-        p(6).try_cast("int").as("rowIdx"),
-        col("value"))
+      .select(col("ip"), Normalize.oidColRow(col("oid")).as("at"), col("value"))
+      .where(col("at").isNotNull)
+      .select(col("ip"), col("at.col").as("colId"), col("at.row").as("rowIdx"), col("value"))
       .groupBy("ip", "rowIdx")
       .pivot("colId", Seq(2, 3, 5, 6, 7, 8, 9))
       .agg(first("value"))
@@ -58,14 +53,14 @@ object SnmpPayload {
         col("7").try_cast("int").as("unit"),
         col("8").try_cast("long").as("max_capacity"),
         col("9").try_cast("long").as("level"))
-  }
 
   /** Colorant-name table keyed (ip, marker, colorant_idx): value column
-    * "4", device sub-index must be "1" (snmp_toner.py:48-59). */
+    * "4", device sub-index must be "1" (snmp_toner.py:48-59). Its own
+    * parse: the 43.12 offsets differ from F13's supplies marker. */
   def colorantTable(walk: DataFrame): DataFrame = {
     val parts = split(col("oid"), "\\.")
     val i = array_position(parts, lit("43"))
-    def p(off: Int): Column = element_at(parts, (i + off).cast("int"))
+    def p(off: Int): Column = try_element_at(parts, (i + off).cast("int"))
     walk
       .where(i > 0 && p(1) === "12" && p(4) === "4" && p(5) === "1")
       .select(col("ip"),
@@ -142,8 +137,8 @@ object SnmpPayload {
   /** A8 — `get_snmp_toner_types` tail (toner_type_snmp.py:85-107):
     * toner-typed rows whose desc mentions "hp", (color, code) pairs
     * deduped, sorted by fixed color rank then code; one codes list per
-    * device. Input: suppliesTable-shaped rows. */
-  def tonerTypeCodes(supplies: DataFrame, keyCol: String = "ip"): DataFrame = {
+    * device. Input: suppliesTable-shaped rows keyed by `ip`. */
+  def tonerTypeCodes(supplies: DataFrame): DataFrame = {
     val colorRank = Map("Black" -> 0, "Cyan" -> 1, "Magenta" -> 2, "Yellow" -> 3)
     val desc = coalesce(col("description"), lit(""))
     val color = tonerColorFromText(desc)
@@ -151,15 +146,15 @@ object SnmpPayload {
     supplies
       .where(col("supply_type").isin(TonerTypes: _*) &&
         length(desc) > 0 && lower(desc).contains("hp"))
-      .select(col(keyCol), color.as("color"), code.as("code"))
+      .select(col("ip"), color.as("color"), code.as("code"))
       .where(col("color").isNotNull && col("code").isNotNull)
       .distinct()
       .withColumn("color_rank",
         coalesce(element_at(typedLit(colorRank), col("color")), lit(99)))
-      .groupBy(col(keyCol))
+      .groupBy(col("ip"))
       .agg(array_sort(collect_list(struct(
         col("color_rank"), col("code")))).as("pairs"))
-      .select(col(keyCol),
+      .select(col("ip"),
         transform(col("pairs"), p => p.getField("code")).as("codes"))
   }
 }

@@ -3,6 +3,8 @@ package graft.tickets
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Normalize.pyStrip
+
 /** Ticketing (SURVEY.md §3.3): point lookup → projection → pure HTML
   * render. The reference's three ticket plugins share search/extract
   * and differ in base subject, collected items, and template
@@ -28,16 +30,6 @@ final case class Ticket(
 final case class TicketItem(label: String, qty: Int)
 
 object TicketSearch {
-
-  /** Python `str.strip()`: removes ALL leading/trailing whitespace —
-    * \t \n \r \f \x0B as well as spaces. Spark's `trim` strips spaces
-    * only, so a tab-padded id like "7\t" would diverge; Java regex \s
-    * is exactly Python's ASCII whitespace class. Residual fidelity gap:
-    * Python also strips Unicode whitespace (U+00A0, U+2028, ...) which
-    * Java \s does not match — switch to `(?U)\s` if real-world inputs carry
-    * non-ASCII padding (the synthesized fixtures never do). */
-  private def pyStrip(c: Column): Column =
-    regexp_replace(c, "^\\s+|\\s+$", "")
 
   /** Python `int(x)` on a string: succeeds only for an integer literal
     * (optionally signed, whitespace-trimmed) — "7.0" RAISES. On a

@@ -80,6 +80,10 @@ class NormalizeSpec extends SparkSpec with TableDrivenPropertyChecks {
       "1.3.6.1.2.1.43.11.1.1.9.1.4")
     val row = got.asInstanceOf[org.apache.spark.sql.Row]
     assert(row.getInt(0) == 9 && row.getInt(1) == 4) // col=9 (level), row=4
+    // the full 43.11.1.1 marker: a 43.11.2.1 table is not supplies
+    assert(eval1(Normalize.oidColRow(col("v")), "1.3.6.1.2.1.43.11.2.1.9.1.4") == null)
+    // an OID that ends inside the marker is no row, not an index error
+    assert(eval1(Normalize.oidColRow(col("v")), "1.3.6.1.2.1.43.11") == null)
   }
 
   test("F15 bitmask: doorOpen+offline → flags + critical") {

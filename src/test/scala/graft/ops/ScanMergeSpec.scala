@@ -42,6 +42,50 @@ class ScanMergeSpec extends SparkSpec {
     assert(byIdx(("Company_Grouped", 2L)) == ("offline", 0))
   }
 
+  test("register with no printerInfo anywhere: every family merges, snapshot reads it") {
+    // the first refresh after an Excel import: no record carries printerInfo
+    val path = java.nio.file.Files.createTempFile("graft-register", ".json")
+    java.nio.file.Files.writeString(path, """{"Company_Grouped": [
+      |  {"ID": 1, "Printer IP": "10.0.0.1", "Type": "M404dn"},
+      |  {"ID": 2, "Printer IP": "10.0.0.2", "Type": "M404dn"},
+      |  {"ID": 3, "Printer IP": "-", "Type": "M404dn"}]}""".stripMargin)
+    val register = DocumentIngest.printers(DocumentIngest.readDocument(spark, path.toString))
+    assert(!register.columns.contains("printerInfo"))
+    val selected = DocumentIngest.hasValidIp(register)
+    val results = Seq(("10.0.0.1", "online", "Black", "41%")).toDF("ip", "status", "c", "p")
+      .select(col("ip"), col("status"),
+        array(struct(col("c").as("cartridge"), col("p").as("remaining_percent"))).as("cartridges"))
+
+    val merged = ScanMerge(register, results, selected)
+    val pi = merged.orderBy("ID").select(col("ID"), col("printerInfo.status"),
+      size(col("printerInfo.cartridges")), col("printerInfo").isNull).collect()
+      .map(r => r.getString(0) -> (r.getString(1), r.get(2), r.getBoolean(3))).toMap
+    assert(pi("1") == ("online", 1, false))   // hit
+    assert(pi("2") == ("offline", 0, false))  // selected, no scan row
+    assert(pi("3")._3)                        // unselected: stays null
+    val snap = FleetSnapshot(merged).orderBy("id").select("id", "Status", "Black", "Error")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSeq
+    assert(snap == Seq(("1", "online", "41%", null), ("2", "offline", null, null),
+      ("3", "offline", null, null)))
+
+    val alerted = ScanMerge.alerts(register,
+      Seq(("10.0.0.1", "Paper jam", "critical")).toDF("ip", "problem", "severity"), selected)
+    assert(alerted.orderBy("ID").select("printerInfo.printerError.problem").as[String]
+      .collect().toSeq == Seq("Paper jam", "Offline", null))
+    val codes = Seq(("10.0.0.1", Seq("W1470A"))).toDF("ip", "codes")
+    val typed = ScanMerge.tonerType(register, codes, selected, web = false)
+    assert(typed.orderBy("ID").select("printerInfo.tonerType").as[Seq[String]]
+      .collect().toSeq == Seq(Seq("W1470A"), Seq("W1470A"), null))
+
+    // a printerInfo carrying only `status` gains the missing fields too
+    val partial = register.withColumn("printerInfo", struct(lit("idle").as("status")))
+    val both = ScanMerge.tonerType(ScanMerge(partial, results, selected), codes, selected,
+      web = false)
+    assert(FleetSnapshot(both).orderBy("id").select("Status", "Black", "Toner Type")
+      .collect().map(_.toSeq).toSeq == Seq(Seq("online", "41%", "W1470A"),
+        Seq("offline", null, "W1470A"), Seq("online", null, null)))
+  }
+
   test("tonerType merge: group probe backfills every member, creates printerInfo") {
     // snmp family over the fixture: the M404dn group's first member
     // (doc order) holds ["W1470A"] → probe wins, no scan needed, and

@@ -13,8 +13,6 @@ import graft.SparkSpec
 class HotLoopExprsSpec extends SparkSpec {
   import spark.implicits._
 
-  GraftExtensions.register(spark)
-
   private val rnd = new scala.util.Random(0xC0FFEE)
 
   test("long_and_popcount equals aggregate(zip_with(bit_count(&)))") {

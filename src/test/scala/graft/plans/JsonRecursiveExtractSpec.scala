@@ -5,7 +5,11 @@ import graft.SparkSpec
 class JsonRecursiveExtractSpec extends SparkSpec {
   import spark.implicits._
 
-  GraftExtensions.register(spark)
+  test("a Sessions-built session resolves every GraftExtensions function") {
+    val missing = GraftExtensions.functions.map(_._1.funcName)
+      .filterNot(spark.catalog.functionExists)
+    assert(missing.isEmpty, s"not installed: $missing")
+  }
 
   test("F24: alert records surface from arbitrary nesting") {
     val payload =

@@ -37,6 +37,23 @@ class DocumentRoundTripSpec extends SparkSpec {
     assert(!Files.exists(java.nio.file.Paths.get(out + ".tmp")))
   }
 
+  test("empty group: reads as no rows, written back as [] beside the other group") {
+    val dir = Files.createTempDirectory("graft-doc")
+    val in = dir.resolve("in.json")
+    // JSON inference types the empty array as array<string>, not records
+    Files.writeString(in, """{"Company_Grouped": [], "Branches_Grouped": [
+      |  {"ID": 105, "Name": "b1", "Printer IP": "10.0.0.5"},
+      |  {"ID": 106, "Name": "b2", "Printer IP": "10.0.0.6"}]}""".stripMargin)
+    val printers = DocumentIngest.printers(DocumentIngest.readDocument(spark, in.toString))
+    val out = dir.resolve("out.json")
+    DocumentIngest.writeDocument(printers, out.toString)
+    assert(Files.readString(out).contains("\"Company_Grouped\": []"))
+
+    val again = DocumentIngest.printers(DocumentIngest.readDocument(spark, out.toString))
+    assert(again.orderBy("row_idx").select("group", "ID").as[(String, String)].collect().toSeq ==
+      Seq(("Branches_Grouped", "105"), ("Branches_Grouped", "106")))
+  }
+
   test("header upgrade: first 'type' claims Toner Type only when absent") {
     val legacy = Seq(("1", "M404dn", "x")).toDF("ID", "tYpe ", "Comment")
     val up = FleetSnapshot.upgradeHeaders(legacy)

@@ -7,6 +7,10 @@ import graft.SparkSpec
 class PayloadParsersSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Status documents of devices with no EventTable payload. */
+  private def statusOnly(docs: Seq[(String, String)]) =
+    docs.toDF("ip", "status_xml").withColumn("events_xml", lit(null).cast("string"))
+
   test("S8/F27: problem_from_status — document-order candidates, category mapping") {
     val xml1 =
       """<psdyn:ProductStatusDyn xmlns:psdyn="http://x/psdyn">
@@ -16,8 +20,8 @@ class PayloadParsersSpec extends SparkSpec {
         |</psdyn:ProductStatusDyn>""".stripMargin
     val xml2 = """<r><StatusCategory>interventionrequired</StatusCategory></r>"""
     val xml3 = """<r><StatusCategory>custommode</StatusCategory></r>"""
-    val rows = PayloadParsers.ledmStatus(
-      Seq(("a", xml1), ("b", xml2), ("c", xml3)).toDF("ip", "xml"), "ip")
+    val rows = PayloadParsers.ledmProblemSeverity(
+      statusOnly(Seq(("a", xml1), ("b", xml2), ("c", xml3))), "ip")
       .select("ip", "problem", "severity").collect()
       .map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
     // blank LocString skipped; StatusMessage wins by DOCUMENT order
@@ -28,9 +32,9 @@ class PayloadParsersSpec extends SparkSpec {
 
   test("S8: ready/sleep/unknown normalization → informational") {
     val mk = (body: String) => s"<root><LocString>$body</LocString></root>"
-    val df = Seq(("a", mk("Ready")), ("b", mk("InPowerSave")),
-      ("c", "<root/>"), ("d", mk("device state unknown"))).toDF("ip", "xml")
-    val rows = PayloadParsers.ledmStatus(df, "ip")
+    val docs = Seq(("a", mk("Ready")), ("b", mk("InPowerSave")),
+      ("c", "<root/>"), ("d", mk("device state unknown")))
+    val rows = PayloadParsers.ledmProblemSeverity(statusOnly(docs), "ip")
       .select("ip", "problem", "severity").collect()
       .map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
     assert(rows("a") == ("Ready", "informational"))

@@ -48,12 +48,14 @@ class SnmpAlertsSpec extends SparkSpec {
       ("p1", "1.3.6.1.2.1.25.3.5.1.2.1", "notanint"), // skipped
       ("p1", "1.3.6.1.2.1.25.3.5.1.2.2", "68"),       // lowToner+offline
       ("p2", "1.3.6.1.2.1.25.3.5.1.2.1", "0"),        // no flags → NO result
-      ("p2", "1.3.6.1.2.1.25.3.5.1.2.2", "4"))        // never reached
+      ("p2", "1.3.6.1.2.1.25.3.5.1.2.2", "4"),        // never reached
+      ("p3", "1.3.6.1.2.1.25.3.5.1.2.1", "128"))      // serviceRequested (bit 7)
       .toDF("ip", "oid", "value")
     val out = SnmpAlerts.hrErrorState(walk).collect()
       .map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
     assert(out("p1") == ("lowToner, offline", "critical"))
     assert(!out.contains("p2"))
+    assert(out("p3") == ("serviceRequested", "critical"))
   }
 
   test("process composition: decide > hr > Normal") {

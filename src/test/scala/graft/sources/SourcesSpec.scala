@@ -103,7 +103,10 @@ class SourcesSpec extends SparkSpec {
     val devices = Seq("10.0.1.7").toDF("ip")
     val supplies = DevicePoll.walk(spark, devices, SnmpPayload.SuppliesBase, client, 1)
     val colorant = DevicePoll.walk(spark, devices, SnmpPayload.ColorantBase, client, 1)
-    val out = SnmpPayload.cartridges(supplies.union(colorant))
+    // OIDs that end early (a truncated device answer) are skipped
+    val truncated = Seq(("10.0.1.7", "1.3.6.1.2.1.43.11", "x"),
+      ("10.0.1.7", "1.3.6.1.2.1.43.12.1", "y")).toDF("ip", "oid", "value")
+    val out = SnmpPayload.cartridges(supplies.union(colorant).unionByName(truncated))
       .as[(String, Seq[(String, String)])].collect()
     assert(out.length == 1)
     val (ip, carts) = out.head
