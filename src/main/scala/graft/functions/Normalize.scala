@@ -99,12 +99,14 @@ object Normalize {
 
   /** F9 `_compute_percent`: unit==19 → clamp(level,0,100); elif max>0 and
     * level>=0 → round(100*level/max) clamped; sentinel levels −1/−2/−3
-    * (and other negatives) → null. Ref: adapters/snmp_toner.py:61-69. */
+    * (and other negatives) → null. Ref: adapters/snmp_toner.py:61-69.
+    * The clamp runs before the cast to long, so a huge level reads 100
+    * instead of overflowing the cast (which throws under ANSI mode). */
   def computePercent(unit: Column, level: Column, max: Column): Column =
     when(level.isNull || level.isin(-1, -2, -3), lit(null).cast("long"))
-      .when(unit === 19, greatest(least(level.cast("long"), lit(100L)), lit(0L)))
+      .when(unit === 19, greatest(least(level, lit(100L)), lit(0L)).cast("long"))
       .when(max > 0 && level >= 0,
-        greatest(least(round(lit(100.0) * level / max).cast("long"), lit(100L)), lit(0L)))
+        greatest(least(round(lit(100.0) * level / max), lit(100.0)), lit(0.0)).cast("long"))
       .otherwise(lit(null).cast("long"))
 
   /** F10 `_pct_with_symbol`: int → "N%". Ref: snmp_toner.py:71-72. */

@@ -17,8 +17,4 @@ object QuerySpec {
   def sql(name: String, oracle: String)(
       run: (SparkSession, String) => DataFrame): QuerySpec =
     QuerySpec(name, run, Some(oracle.trim))
-
-  def rowsOnly(name: String)(
-      run: (SparkSession, String) => DataFrame): QuerySpec =
-    QuerySpec(name, run, None)
 }

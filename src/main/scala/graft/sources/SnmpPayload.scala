@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.functions.Normalize
 
 /** SNMP payload → cartridges: the reference's `get_snmp_toner` pipeline
-  * (adapters/snmp_toner.py:90-138) as declarative relational transforms
-  * over walk rows `(ip, oid, value)` — SURVEY.md §2 A1 (pivot), J4
-  * (colorant join), F9/F10/F11/F12/F13 (percent/format/color/text/OID).
+  * (adapters/snmp_toner.py:90-138) over walk rows `(ip, oid, value)` —
+  * SURVEY.md §2 A1 (row reshape), J4 (colorant lookup), W3 (row order),
+  * F9/F10/F11/F12/F13 (percent/format/color/text/OID).
   *
   * Faithful layout (snmp_toner.py:6-14):
   *  - supplies OID = …43.11.1.1.{col}.{dev}.{rowIdx} — col at marker+4,
@@ -17,15 +17,17 @@ import graft.functions.Normalize
   *    including the row's marker/colorant link;
   *  - colorant OID = …43.12.1.1.4.{dev}.{marker}.{color} with dev
   *    required to be "1" (:47-59);
-  *  - join defaults: marker None-or-0 → 1, colorant None → 0
+  *  - lookup defaults: marker None-or-0 → 1, colorant None → 0
   *    (`r.get(col) or default`, :128-129);
   *  - toner-type filter ∈ {3,5,6,10,21} (:109-110), rows in ascending
   *    SNMP row order (:124), text fields through `_to_text` (F12).
   *
-  * All expressions are built-in (codegen'd); the only shuffles are the
-  * two pivot groupBys and the final per-device collect — each keyed by
-  * device, so at fleet scale the plan is embarrassingly parallel with
-  * map-side partial aggregation.
+  * Every step is keyed by device, as in the reference's per-printer
+  * loop, so the plan has one shuffle: each walk row is parsed once (a
+  * codegen'd projection), one `groupBy(ip)` collects the device's
+  * supplies cells and colorant rows, and array functions build its
+  * cartridges. Higher-order functions are interpreted, so the lambdas
+  * compare only the integers parsed before the shuffle.
   */
 object SnmpPayload {
 
@@ -35,68 +37,60 @@ object SnmpPayload {
   /** Toner-ish supply types kept by the reference (snmp_toner.py:13). */
   val TonerTypes: Seq[Int] = Seq(3, 5, 6, 10, 21)
 
-  /** Supplies table: OID triples → one row per (ip, rowIdx) with the
-    * reference's column set (A1 pivot; snmp_toner.py:91-105). */
-  def suppliesTable(walk: DataFrame): DataFrame =
-    walk
-      .select(col("ip"), Normalize.oidColRow(col("oid")).as("at"), col("value"))
-      .where(col("at").isNotNull)
-      .select(col("ip"), col("at.col").as("colId"), col("at.row").as("rowIdx"), col("value"))
-      .groupBy("ip", "rowIdx")
-      .pivot("colId", Seq(2, 3, 5, 6, 7, 8, 9))
-      .agg(first("value"))
-      .select(col("ip"), col("rowIdx"),
-        col("2").try_cast("int").as("marker_idx"),
-        col("3").try_cast("int").as("colorant_idx"),
-        col("5").try_cast("int").as("supply_type"),
-        Normalize.toText(col("6")).as("description"),
-        col("7").try_cast("int").as("unit"),
-        col("8").try_cast("long").as("max_capacity"),
-        col("9").try_cast("long").as("level"))
-
-  /** Colorant-name table keyed (ip, marker, colorant_idx): value column
-    * "4", device sub-index must be "1" (snmp_toner.py:48-59). Its own
-    * parse: the 43.12 offsets differ from F13's supplies marker. */
-  def colorantTable(walk: DataFrame): DataFrame = {
+  /** Full pipeline, one pass per device: supplies rows (A1; a column's
+    * value is its first non-null cell) → type filter → colorant lookup
+    * (J4 with the reference's `or`-defaults: marker 0/None→1, colorant
+    * None→0; a key that matches several colorant rows yields one
+    * cartridge each, none → the description's color) → percent
+    * (F9/F10) + friendly color (F11) → per-device cartridge array in
+    * ascending SNMP row order (W3). Devices with no toner row are absent. */
+  def cartridges(walk: DataFrame): DataFrame = {
+    val at = Normalize.oidColRow(col("oid"))
+    // the 43.12 colorant parse: its offsets differ from F13's supplies marker
     val parts = split(col("oid"), "\\.")
     val i = array_position(parts, lit("43"))
     def p(off: Int): Column = try_element_at(parts, (i + off).cast("int"))
-    walk
-      .where(i > 0 && p(1) === "12" && p(4) === "4" && p(5) === "1")
+    val perDevice = walk
       .select(col("ip"),
-        p(6).try_cast("int").as("marker"),
-        p(7).try_cast("int").as("colorant_idx"),
-        Normalize.toText(col("value")).as("colorant_name"))
-  }
-
-  /** Full pipeline: type filter → supplies ⋈ colorant (J4 with the
-    * reference's `or`-defaults: marker 0/None→1, colorant None→0) →
-    * percent (F9/F10) + friendly color (F11) → per-device cartridge
-    * array in ascending SNMP row order (W3). */
-  def cartridges(walk: DataFrame): DataFrame = {
-    val s = suppliesTable(walk).alias("s")
-    val c = colorantTable(walk).alias("c")
-    // Python `x or default` treats 0 AND None as falsy — marker 0 → 1.
-    val markerKey = when(col("s.marker_idx").isNull || col("s.marker_idx") === 0, 1)
-      .otherwise(col("s.marker_idx"))
-    val joined = s
-      .where(col("supply_type").isin(TonerTypes: _*))
-      .join(c,
-        col("s.ip") === col("c.ip") &&
-          markerKey === col("c.marker") &&
-          coalesce(col("s.colorant_idx"), lit(0)) === col("c.colorant_idx"),
-        "left")
-      .select(col("s.ip").as("ip"), col("s.rowIdx").as("rowIdx"),
-        Normalize.friendlyColor(col("c.colorant_name"), col("s.description"))
-          .as("cartridge"),
-        Normalize.pctWithSymbol(Normalize.computePercent(
-          col("s.unit"), col("s.level"), col("s.max_capacity")))
-          .as("remaining_percent"))
-    joined
+        when(at.isNotNull && col("value").isNotNull,
+          struct(at("row").as("row"), at("col").as("col"), col("value"))).as("cell"),
+        // null-ip rows share one group without being one device: no colorant lookup
+        when(col("ip").isNotNull && i > 0 && p(1) === "12" && p(4) === "4" && p(5) === "1",
+          struct(p(6).try_cast("int").as("marker"), p(7).try_cast("int").as("colorant_idx"),
+            Normalize.toText(col("value")).as("colorant_name"))).as("colorant"))
       .groupBy("ip")
-      .agg(array_sort(collect_list(struct(
-        col("rowIdx"), col("cartridge"), col("remaining_percent"))))
-        .as("ordered"))
+      .agg(collect_list("cell").as("cells"), collect_list("colorant").as("colorants"))
+
+    val cells = col("cells")
+    def cell(row: Column, colId: Int): Column =
+      get(filter(cells, c => c("row") <=> row && c("col") === colId), lit(0))("value")
+    val supplies = transform(array_distinct(transform(cells, _("row"))), r => struct(
+      r.as("rowIdx"),
+      cell(r, 2).try_cast("int").as("marker_idx"),
+      cell(r, 3).try_cast("int").as("colorant_idx"),
+      cell(r, 5).try_cast("int").as("supply_type"),
+      Normalize.toText(cell(r, 6)).as("description"),
+      cell(r, 7).try_cast("int").as("unit"),
+      cell(r, 8).try_cast("long").as("max_capacity"),
+      cell(r, 9).try_cast("long").as("level")))
+    val toners = filter(supplies, s => s("supply_type").isin(TonerTypes: _*))
+    val rows = flatten(transform(toners, s => {
+      // Python `x or default` treats 0 AND None as falsy — marker 0 → 1.
+      val markerKey = when(s("marker_idx").isNull || s("marker_idx") === 0, 1)
+        .otherwise(s("marker_idx"))
+      val names = transform(filter(col("colorants"), c =>
+        c("marker") === markerKey && c("colorant_idx") === coalesce(s("colorant_idx"), lit(0))),
+        _("colorant_name"))
+      val pct = Normalize.pctWithSymbol(Normalize.computePercent(
+        s("unit"), s("level"), s("max_capacity")))
+      transform(when(size(names) > 0, names).otherwise(array(lit(null).cast("string"))),
+        n => struct(s("rowIdx").as("rowIdx"),
+          Normalize.friendlyColor(n, s("description")).as("cartridge"),
+          pct.as("remaining_percent")))
+    }))
+    perDevice
+      .select(col("ip"), array_sort(rows).as("ordered"))
+      .where(size(col("ordered")) > 0)
       .select(col("ip"),
         transform(col("ordered"),
           x => struct(x.getField("cartridge").as("cartridge"),
@@ -137,7 +131,8 @@ object SnmpPayload {
   /** A8 — `get_snmp_toner_types` tail (toner_type_snmp.py:85-107):
     * toner-typed rows whose desc mentions "hp", (color, code) pairs
     * deduped, sorted by fixed color rank then code; one codes list per
-    * device. Input: suppliesTable-shaped rows keyed by `ip`. */
+    * device. Input: rows with `ip`, `supply_type` (int) and
+    * `description` (string). */
   def tonerTypeCodes(supplies: DataFrame): DataFrame = {
     val colorRank = Map("Black" -> 0, "Cyan" -> 1, "Magenta" -> 2, "Yellow" -> 3)
     val desc = coalesce(col("description"), lit(""))

@@ -68,7 +68,9 @@ class NormalizeSpec extends SparkSpec with TableDrivenPropertyChecks {
       (7, 37.0, 100, Some(37L)),   // ratio path
       (7, 1.0, 3, Some(33L)),      // round(100/3)=33
       (7, -2.0, 100, None),        // sentinel → null
-      (7, 10.0, 0, None))          // max<=0 → null
+      (7, 10.0, 0, None),          // max<=0 → null
+      (7, 9e17, 1, Some(100L)),    // 100·level/max past a long: clamped
+      (19, 9e19, 0, Some(100L)))   // unit 19, level past a long: clamped
     val df = rows.map { case (u, l, m, _) => (u, l, m) }.toDF("u", "l", "m")
     val got = df.select(Normalize.computePercent(col("u"), col("l"), col("m")))
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))

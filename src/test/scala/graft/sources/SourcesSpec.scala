@@ -98,6 +98,16 @@ class SourcesSpec extends SparkSpec {
     assert(CountingSnmpClient.polls.sum() == 2)
   }
 
+  private val S = SnmpPayload.SuppliesBase
+  private val C = SnmpPayload.ColorantBase
+
+  /** One supplies row's cells: column id → value (walk order kept). */
+  private def supplyRow(ip: String, row: Int, cells: (Int, String)*) =
+    cells.map { case (c, v) => (ip, s"$S.$c.1.$row", v) }
+
+  private def cartridgeMap(walk: org.apache.spark.sql.DataFrame) =
+    SnmpPayload.cartridges(walk).as[(String, Seq[(String, String)])].collect().toMap
+
   test("A1/J4/F9-F11: SNMP walk rows → ordered cartridge structs") {
     val client = new DeterministicSnmpFake(failEvery = 0)
     val devices = Seq("10.0.1.7").toDF("ip")
@@ -105,12 +115,40 @@ class SourcesSpec extends SparkSpec {
     val colorant = DevicePoll.walk(spark, devices, SnmpPayload.ColorantBase, client, 1)
     // OIDs that end early (a truncated device answer) are skipped
     val truncated = Seq(("10.0.1.7", "1.3.6.1.2.1.43.11", "x"),
-      ("10.0.1.7", "1.3.6.1.2.1.43.12.1", "y")).toDF("ip", "oid", "value")
-    val out = SnmpPayload.cartridges(supplies.union(colorant).unionByName(truncated))
-      .as[(String, Seq[(String, String)])].collect()
-    assert(out.length == 1)
-    val (ip, carts) = out.head
-    assert(ip == "10.0.1.7")
+      ("10.0.1.7", "1.3.6.1.2.1.43.12.1", "y"))
+    val edge =
+      // lookup defaults: marker 0 and marker null → 1, colorant null → 0;
+      // no colorant match keeps the description's color; a non-toner and
+      // an unparsable supply_type are dropped
+      supplyRow("d1", 1, 2 -> "0", 3 -> "1", 5 -> "3", 6 -> "toner A", 7 -> "7", 8 -> "100", 9 -> "40") ++
+      supplyRow("d1", 2, 3 -> "2", 5 -> "3", 6 -> "toner B", 7 -> "7", 8 -> "100", 9 -> "50") ++
+      supplyRow("d1", 3, 2 -> "1", 5 -> "3", 6 -> "toner C", 7 -> "19", 9 -> "70") ++
+      supplyRow("d1", 4, 2 -> "1", 3 -> "9", 5 -> "3", 6 -> "yellow toner", 7 -> "7", 8 -> "200", 9 -> "50") ++
+      supplyRow("d1", 5, 2 -> "1", 3 -> "1", 5 -> "4", 6 -> "waste", 7 -> "7", 8 -> "100", 9 -> "10") ++
+      supplyRow("d1", 6, 2 -> "1", 3 -> "1", 5 -> "toner", 6 -> "black", 7 -> "7", 8 -> "100", 9 -> "10") ++
+      Seq(("d1", s"$C.1.1.1", "cyan"), ("d1", s"$C.1.1.2", "magenta"), ("d1", s"$C.1.1.0", "black")) ++
+      // only colorant rows, or only non-toner rows: no cartridges, no entry
+      Seq(("d2", s"$C.1.1.1", "cyan")) ++
+      supplyRow("d3", 1, 2 -> "1", 3 -> "1", 5 -> "4", 6 -> "waste", 9 -> "10") ++
+      Seq(("d3", s"$C.1.1.1", "black")) ++
+      // a colorant key with two colorant rows fans out, in
+      // (rowIdx, cartridge, remaining_percent) order
+      supplyRow("d4", 2, 2 -> "1", 3 -> "2", 5 -> "3", 6 -> "toner", 7 -> "7", 8 -> "100", 9 -> "20") ++
+      supplyRow("d4", 1, 2 -> "1", 3 -> "1", 5 -> "3", 6 -> "toner", 7 -> "7", 8 -> "100", 9 -> "10") ++
+      Seq(("d4", s"$C.1.1.1", "yellow"), ("d4", s"$C.1.1.2", "magenta"),
+        ("d4", s"$C.1.1.1", "black")) ++
+      // a supplies OID that ends before its row id is a null row, which
+      // sorts first
+      Seq(("d5", s"$S.5.1", "3"), ("d5", s"$S.6.1", "black toner"), ("d5", s"$S.7.1", "7"),
+        ("d5", s"$S.8.1", "100"), ("d5", s"$S.9.1", "30")) ++
+      supplyRow("d5", 1, 5 -> "3", 6 -> "cyan toner", 7 -> "7", 8 -> "100", 9 -> "60") ++
+      // an OID repeated with the same value
+      supplyRow("d6", 1, 5 -> "3", 6 -> "toner", 7 -> "7", 8 -> "100", 9 -> "80", 9 -> "80") ++
+      Seq(("d6", s"$C.1.1.0", "cyan"), ("d6", s"$C.1.1.0", "cyan"))
+    val out = cartridgeMap(supplies.union(colorant)
+      .unionByName((truncated ++ edge).toDF("ip", "oid", "value")))
+    assert(out.keySet == Set("10.0.1.7", "d1", "d4", "d5", "d6"))
+    val carts = out("10.0.1.7")
     val h = math.abs("10.0.1.7".hashCode)
     assert(carts.length == 1 + h % 4)
     // colors follow the colorant table in SNMP row order
@@ -121,6 +159,48 @@ class SourcesSpec extends SparkSpec {
       assert(p.matches("\\d+%"))
       assert(p.dropRight(1).toInt >= 0 && p.dropRight(1).toInt <= 100)
     }
+    assert(out("d1") == Seq(("Cyan", "40%"), ("Magenta", "50%"), ("Black", "70%"),
+      ("Yellow", "25%")))
+    assert(out("d4") == Seq(("Black", "10%"), ("Yellow", "10%"), ("Magenta", "20%")))
+    assert(out("d5") == Seq(("Black", "30%"), ("Cyan", "60%")))
+    assert(out("d6") == Seq(("Cyan", "80%"), ("Cyan", "80%")))
+  }
+
+  test("F9: a huge level reads 100% and leaves every other cartridge as it was") {
+    val client = new DeterministicSnmpFake(failEvery = 0)
+    val ips = Seq("10.0.1.7", "10.0.3.9")
+    val walk = ips.flatMap(ip =>
+      (client.walk(ip, S) ++ client.walk(ip, C)).map { case (o, v) => (ip, o, v) })
+    val base = cartridgeMap(walk.toDF("ip", "oid", "value"))
+    // row 1 has unit 7; with max 1, 100·level/max does not fit a long
+    val huge = walk.map {
+      case ("10.0.1.7", o, _) if o == s"$S.8.1.1" => ("10.0.1.7", o, "1")
+      case ("10.0.1.7", o, _) if o == s"$S.9.1.1" => ("10.0.1.7", o, "900000000000000000")
+      case r => r
+    }
+    val got = cartridgeMap(huge.toDF("ip", "oid", "value"))
+    assert(got("10.0.1.7").head == ((base("10.0.1.7").head._1, "100%")))
+    assert(got("10.0.1.7").tail == base("10.0.1.7").tail)
+    assert(got - "10.0.1.7" == base - "10.0.1.7")
+  }
+
+  test("cartridges over a two-walk union: one Exchange, no Join, one poll per device and OID") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val devices = Seq("10.0.0.1", "10.0.0.2", "10.0.0.3").toDF("ip")
+    val client = new CountingSnmpClient
+    val walk = DevicePoll.walk(spark, devices, S, client, 2)
+      .union(DevicePoll.walk(spark, devices, C, client, 2))
+    val carts = SnmpPayload.cartridges(walk)
+    CountingSnmpClient.polls.reset()
+    assert(carts.collect().length == 3)
+    assert(CountingSnmpClient.polls.sum() == 6)
+    val plan = carts.queryExecution.executedPlan
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    assert(helper.collect(plan) { case e: Exchange => e }.length == 1)
+    assert(helper.collect(plan) { case j: BaseJoinExec => j }.isEmpty)
+    assert(helper.collect(plan) { case s: RDDScanExec => s }.length == 2)
   }
 
   test("FleetSnapshot: flatten + first-wins colors + raw nulls") {
