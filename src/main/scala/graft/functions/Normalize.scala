@@ -18,11 +18,18 @@ object Normalize {
   def norm(c: Column): Column =
     lower(regexp_replace(trim(c), "\\s+", " "))
 
-  /** F2 `canonicalize_id`: numeric-looking → str(trunc(v)) ("7.0"→"7");
-    * else strip + newlines→spaces. Ref: core/excel/update_from_json.py:17-26. */
+  /** F2 `canonicalize_id`: numeric-looking → str(int(float(v))) ("7.0"→"7");
+    * else strip + newlines→spaces. Ref: core/excel/update_from_json.py:17-26.
+    * Python's int() is unbounded, so a finite value past a long's range
+    * gives its integer digits ("1e20" → "1" + 20 zeros; past 17
+    * significant digits these are the double's shortest decimal form,
+    * where Python prints its exact binary value). NaN and ±inf fail
+    * int() and take the text branch. Nothing here throws under ANSI mode. */
   def canonicalizeId(c: Column): Column = {
     val d = c.cast("string").try_cast("double")
-    when(d.isNotNull, d.cast("long").cast("string"))
+    val finite = abs(d) < Double.PositiveInfinity // Spark orders NaN above +inf
+    when(finite, coalesce(d.try_cast("long").cast("string"),
+        regexp_replace(format_number(d, 0), ",", "")))
       .otherwise(trim(regexp_replace(c.cast("string"), "[\\n\\r]", " ")))
   }
 
@@ -93,9 +100,11 @@ object Normalize {
     (postal, cleaned)
   }
 
-  /** F8 `_safe_int`: int(float(str(x))) else null. Ref: locations.py:11-17. */
+  /** F8 `_safe_int`: int(float(str(x))) else null. Ref: locations.py:11-17.
+    * NaN, ±inf and values past a long's range read null instead of
+    * throwing under ANSI mode. */
   def safeInt(c: Column): Column =
-    c.cast("string").try_cast("double").cast("long")
+    c.cast("string").try_cast("double").try_cast("long")
 
   /** F9 `_compute_percent`: unit==19 → clamp(level,0,100); elif max>0 and
     * level>=0 → round(100*level/max) clamped; sentinel levels −1/−2/−3

@@ -11,14 +11,18 @@ import org.apache.spark.sql.DataFrame
   * run (core/pipeline.py:67-147; cli/command.py:15-94;
   * adapters/script_runner.py:33-84).
   *
-  * Here a stage is a named pure `DataFrame => DataFrame`; state crosses
-  * stages in memory as an immutable DataFrame (lineage), not through a
-  * JSON file on disk — snapshots between stages are an optional
-  * `checkpoint` callback (parquet overwrite ≙ the reference's atomic
-  * tmp-rename replace, adapters/printers_store.py:38-42). Failures
-  * degrade: a failing stage contributes its error to the summary and
-  * the previous DataFrame flows on (the reference collects non-zero
-  * exit codes and continues, cli/command.py:69-88).
+  * Here a stage is a named pure `DataFrame => DataFrame`. As in the
+  * reference, where each step runs once and replaces the store before
+  * the next step reads it (adapters/printers_store.py:38-42), each
+  * stage's output is materialized once, as an eager local checkpoint,
+  * and that frame is what the next stage, the `checkpoint` callback
+  * and `RunSummary.out` read. Nothing downstream re-runs an earlier
+  * stage: a device a stage polls is polled once per run, and a write
+  * over the run's own input file cannot be read back into it. Failures
+  * degrade: a stage that throws while building its plan or while
+  * executing contributes its error to the summary and the previous
+  * frame flows on (the reference collects non-zero exit codes and
+  * continues, cli/command.py:69-88).
   */
 final case class Stage(
     step: String,    // component group, e.g. "tonerFinder"
@@ -145,23 +149,23 @@ object Pipeline {
       }
     }
 
-  /** Execute in order with per-stage timing; a failing stage logs and is
-    * skipped (input flows through). `checkpoint` is called after each
-    * successful stage (snapshot-between-steps semantics).
-    *
-    * Stages are lazy, so "failing" means failing while the stage BUILDS
-    * its plan (`st.f(df)` throws — e.g. an unresolved column). A plan
-    * that builds but fails when executed is not caught here: it surfaces
-    * at the caller's first action on `RunSummary.out` (or inside
-    * `checkpoint`), and `RunSummary` does not record it. Per-stage
-    * timing likewise measures plan construction unless `checkpoint`
-    * runs an action. */
+  /** Execute in order; a failing stage is recorded and skipped (its
+    * input flows on). Each stage runs once: its output is materialized
+    * with an eager `localCheckpoint` inside the stage's `Try`, so a
+    * failure while executing degrades exactly like one while building
+    * the plan, and `elapsedS` times the execution. A lost checkpoint
+    * block fails the next read instead of silently re-running the stage
+    * (as an evicted cache would, polling the devices again). The blocks
+    * are not released here: `RunSummary.out` and the frames handed to
+    * `checkpoint` read them, so the caller unpersists them when done.
+    * `checkpoint` is called after each successful stage with that
+    * stage's materialized output. */
   def run(input: DataFrame, stages: Seq[Stage],
       checkpoint: (String, DataFrame) => Unit = (_, _) => ()): RunSummary = {
     val (results, out) = stages.foldLeft((Vector.empty[StageResult], input)) {
       case ((acc, df), st) =>
         val t0 = System.nanoTime()
-        Try(st.f(df)) match {
+        Try(st.f(df).localCheckpoint()) match {
           case Success(next) =>
             checkpoint(s"${st.step}:${st.substep}", next)
             val r = StageResult(st.step, st.substep, ok = true,

@@ -3,6 +3,7 @@ package graft.sources
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Simulated per-device fan-out source (SURVEY.md §2 S5/S6, §4.3).
@@ -45,13 +46,14 @@ object DevicePoll {
 
   /** Fan out `client.walk(ip, baseOid)` across `parallelism` pollers.
     * Input: any DataFrame with a string `ip` column (deduplicated —
-    * one poll per device even if upstream has repeats). */
+    * one poll per device even if upstream has repeats). One shuffle
+    * hashes every copy of an IP into the same poller, which then polls
+    * each distinct IP of its partition once. */
   def walk(spark: SparkSession, devices: DataFrame, baseOid: String,
       client: DeviceClient, parallelism: Int = 32): DataFrame = {
-    val ips = devices.select("ip").distinct().repartition(parallelism)
+    val ips = devices.select("ip").repartition(parallelism, col("ip"))
     val rows = ips.rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        val ip = r.getString(0)
+      it.map(_.getString(0)).distinct.flatMap { ip =>
         Try(client.walk(ip, baseOid)) match {
           case Success(rows) => rows.iterator.map { case (o, v) => Row(ip, o, v) }
           case Failure(_)    => Iterator.empty // degrade, don't abort

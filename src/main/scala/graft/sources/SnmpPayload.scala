@@ -40,8 +40,8 @@ object SnmpPayload {
   /** Full pipeline, one pass per device: supplies rows (A1; a column's
     * value is its first non-null cell) → type filter → colorant lookup
     * (J4 with the reference's `or`-defaults: marker 0/None→1, colorant
-    * None→0; a key that matches several colorant rows yields one
-    * cartridge each, none → the description's color) → percent
+    * None→0; a key walked several times takes its last colorant row,
+    * none → the description's color) → percent
     * (F9/F10) + friendly color (F11) → per-device cartridge array in
     * ascending SNMP row order (W3). Devices with no toner row are absent. */
   def cartridges(walk: DataFrame): DataFrame = {
@@ -74,20 +74,20 @@ object SnmpPayload {
       cell(r, 8).try_cast("long").as("max_capacity"),
       cell(r, 9).try_cast("long").as("level")))
     val toners = filter(supplies, s => s("supply_type").isin(TonerTypes: _*))
-    val rows = flatten(transform(toners, s => {
+    val rows = transform(toners, s => {
       // Python `x or default` treats 0 AND None as falsy — marker 0 → 1.
       val markerKey = when(s("marker_idx").isNull || s("marker_idx") === 0, 1)
         .otherwise(s("marker_idx"))
-      val names = transform(filter(col("colorants"), c =>
-        c("marker") === markerKey && c("colorant_idx") === coalesce(s("colorant_idx"), lit(0))),
-        _("colorant_name"))
+      val matches = filter(col("colorants"), c =>
+        c("marker") === markerKey && c("colorant_idx") === coalesce(s("colorant_idx"), lit(0)))
+      // the reference's colorant dict keeps one name per key, the last walked
+      val name = try_element_at(matches, lit(-1))("colorant_name")
       val pct = Normalize.pctWithSymbol(Normalize.computePercent(
         s("unit"), s("level"), s("max_capacity")))
-      transform(when(size(names) > 0, names).otherwise(array(lit(null).cast("string"))),
-        n => struct(s("rowIdx").as("rowIdx"),
-          Normalize.friendlyColor(n, s("description")).as("cartridge"),
-          pct.as("remaining_percent")))
-    }))
+      struct(s("rowIdx").as("rowIdx"),
+        Normalize.friendlyColor(name, s("description")).as("cartridge"),
+        pct.as("remaining_percent"))
+    })
     perDevice
       .select(col("ip"), array_sort(rows).as("ordered"))
       .where(size(col("ordered")) > 0)

@@ -23,9 +23,23 @@ class NormalizeSpec extends SparkSpec with TableDrivenPropertyChecks {
   test("F2 canonicalize_id: numeric path truncates, string path cleans") {
     val cases = Table(("in", "out"),
       ("7.0", "7"), ("7", "7"), (" 7.0 ", "7"), ("7.9", "7"),
-      ("id-12\n", "id-12"), ("a\nb", "a b"))
+      ("id-12\n", "id-12"), ("a\nb", "a b"),
+      // int(float(v)) is unbounded in Python and fails on NaN/inf, which
+      // then take the text branch; none of these may throw under ANSI mode
+      ("NaN", "NaN"), (" nan ", "nan"), ("inf", "inf"), ("-Infinity", "-Infinity"),
+      ("1e20", "100000000000000000000"), ("99999999999999999999", "100000000000000000000"),
+      ("-2.5e19", "-25000000000000000000"))
     forAll(cases) { (in, out) =>
       assert(eval1(Normalize.canonicalizeId(col("v")), in) == out, s"for $in")
+    }
+  }
+
+  test("F8 safe_int: int(float(x)), null where a long cannot hold it") {
+    val cases = Table(("in", "out"),
+      ("7.9", 7L), (" -3.5 ", -3L), ("n/a", null), ("NaN", null), ("inf", null),
+      ("1e20", null), ("99999999999999999999", null))
+    forAll(cases) { (in, out) =>
+      assert(eval1(Normalize.safeInt(col("v")), in) == out, s"for $in")
     }
   }
 

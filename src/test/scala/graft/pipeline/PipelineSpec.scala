@@ -76,6 +76,18 @@ class PipelineSpec extends SparkSpec {
     assert(sum.results.forall(_.elapsedS >= 0))
   }
 
+  test("run: a stage whose plan builds but fails when executed degrades the same way") {
+    val stages = Seq(
+      Stage("s", "double", d => d.withColumn("v2", col("id") * 2)),
+      Stage("s", "assert", d => d.withColumn("bad", assert_true(col("id") < 0))),
+      Stage("s", "add", d => d.withColumn("v3", col("id") + 1)))
+    val sum = Pipeline.run(df, stages)
+    assert(sum.failures.map(_.substep) == Seq("assert"))
+    assert(sum.failures.head.error.exists(_.nonEmpty))
+    assert(sum.out.columns.toSeq == Seq("id", "v", "v2", "v3"))
+    assert(sum.out.orderBy("id").select("v3").as[Int].collect().toSeq == Seq(2, 3))
+  }
+
   test("run: checkpoint called once per successful stage") {
     var seen = Vector.empty[String]
     val stages = Seq(

@@ -96,6 +96,17 @@ class SourcesSpec extends SparkSpec {
     assert(kept.select("ip").distinct().as[String].collect().toSet ==
       Set("10.0.0.2", "10.0.0.3"))
     assert(CountingSnmpClient.polls.sum() == 2)
+
+    // copies of one IP that start in different partitions meet in one poller
+    val spread = spark.sparkContext.parallelize(
+      Seq("10.0.0.1", "10.0.0.2", "10.0.0.1", "10.0.0.2", "10.0.0.3", "10.0.0.1"), 3)
+      .toDF("ip")
+    assert(spread.rdd.getNumPartitions == 3)
+    CountingSnmpClient.polls.reset()
+    val walked = DevicePoll.walk(spark, spread, SnmpPayload.SuppliesBase,
+      new CountingSnmpClient, parallelism = 2)
+    assert(walked.select("ip").distinct().count() == 3)
+    assert(CountingSnmpClient.polls.sum() == 3)
   }
 
   private val S = SnmpPayload.SuppliesBase
@@ -131,8 +142,8 @@ class SourcesSpec extends SparkSpec {
       Seq(("d2", s"$C.1.1.1", "cyan")) ++
       supplyRow("d3", 1, 2 -> "1", 3 -> "1", 5 -> "4", 6 -> "waste", 9 -> "10") ++
       Seq(("d3", s"$C.1.1.1", "black")) ++
-      // a colorant key with two colorant rows fans out, in
-      // (rowIdx, cartridge, remaining_percent) order
+      // a colorant key with two colorant rows takes the last one walked,
+      // in (rowIdx, cartridge, remaining_percent) order
       supplyRow("d4", 2, 2 -> "1", 3 -> "2", 5 -> "3", 6 -> "toner", 7 -> "7", 8 -> "100", 9 -> "20") ++
       supplyRow("d4", 1, 2 -> "1", 3 -> "1", 5 -> "3", 6 -> "toner", 7 -> "7", 8 -> "100", 9 -> "10") ++
       Seq(("d4", s"$C.1.1.1", "yellow"), ("d4", s"$C.1.1.2", "magenta"),
@@ -161,9 +172,9 @@ class SourcesSpec extends SparkSpec {
     }
     assert(out("d1") == Seq(("Cyan", "40%"), ("Magenta", "50%"), ("Black", "70%"),
       ("Yellow", "25%")))
-    assert(out("d4") == Seq(("Black", "10%"), ("Yellow", "10%"), ("Magenta", "20%")))
+    assert(out("d4") == Seq(("Black", "10%"), ("Magenta", "20%")))
     assert(out("d5") == Seq(("Black", "30%"), ("Cyan", "60%")))
-    assert(out("d6") == Seq(("Cyan", "80%"), ("Cyan", "80%")))
+    assert(out("d6") == Seq(("Cyan", "80%"))) // a repeated colorant OID is one cartridge
   }
 
   test("F9: a huge level reads 100% and leaves every other cartridge as it was") {
@@ -255,6 +266,21 @@ class SourcesSpec extends SparkSpec {
     assert(rows("999").getAs[String]("Status") == "y")       // untouched
     assert(rows("7.0").getAs[String]("Comment") == "keep")   // non-target col kept
     assert(updated.columns.contains("Toner Type"))           // column append
+  }
+
+  test("J3: a nan, inf or huge sheet ID matches nothing and leaves every other row unchanged") {
+    val idMap = FleetSnapshot.upsertIdMap(FleetSnapshot(DocumentIngest.printers(doc)))
+    val sheet = Seq(("7.0", "x"), ("105", "y"), ("999", "z")).toDF("ID", "Status")
+    val hostile = Seq(("nan", "n"), ("inf", "i"), ("1e20", "h")).toDF("ID", "Status")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getAs[String]("ID") -> r.toSeq.drop(1)).toMap
+    val base = rows(FleetSnapshot.updateSheet(sheet, idMap))
+    val got = rows(FleetSnapshot.updateSheet(sheet.union(hostile), idMap))
+    assert(got -- Seq("nan", "inf", "1e20") == base)
+    // unmatched: Status kept, the appended snapshot columns null
+    Seq("nan" -> "n", "inf" -> "i", "1e20" -> "h").foreach { case (id, status) =>
+      assert(got(id) == status +: Seq.fill(got(id).length - 1)(null))
+    }
   }
 }
 
