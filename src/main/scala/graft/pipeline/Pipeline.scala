@@ -159,15 +159,24 @@ object Pipeline {
     * are not released here: `RunSummary.out` and the frames handed to
     * `checkpoint` read them, so the caller unpersists them when done.
     * `checkpoint` is called after each successful stage with that
-    * stage's materialized output. */
+    * stage's materialized output. Every Spark job a stage runs (its plan
+    * build's and its checkpoint's) carries the job description
+    * `step:substep`; the caller's description is restored after the
+    * stage, so the `checkpoint` callback's jobs keep it. */
   def run(input: DataFrame, stages: Seq[Stage],
       checkpoint: (String, DataFrame) => Unit = (_, _) => ()): RunSummary = {
+    val sc = input.sparkSession.sparkContext
     val (results, out) = stages.foldLeft((Vector.empty[StageResult], input)) {
       case ((acc, df), st) =>
         val t0 = System.nanoTime()
-        Try(st.f(df).localCheckpoint()) match {
+        val name = s"${st.step}:${st.substep}"
+        val prevDesc = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(name)
+        val attempt = try Try(st.f(df).localCheckpoint())
+          finally sc.setJobDescription(prevDesc)
+        attempt match {
           case Success(next) =>
-            checkpoint(s"${st.step}:${st.substep}", next)
+            checkpoint(name, next)
             val r = StageResult(st.step, st.substep, ok = true,
               (System.nanoTime() - t0) / 1e9, None)
             (acc :+ r, next)

@@ -1,7 +1,12 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.SparkSpec
 
@@ -96,5 +101,43 @@ class PipelineSpec extends SparkSpec {
       Stage("s", "b", identity[DataFrame] _))
     Pipeline.run(df, stages, (name, _) => seen :+= name)
     assert(seen == Vector("s:a", "s:b"))
+  }
+
+  test("run: every job a stage runs carries the stage's step:substep description") {
+    val key = "spark.job.description"
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descs.add(String.valueOf(e.properties.getProperty(key)))
+    }
+    val sc = spark.sparkContext
+    /** A job under `desc`; the listener sees jobs in order, so seeing
+      * this one means it has seen every job before it. */
+    def marker(desc: String): Unit = { sc.setJobDescription(desc); spark.range(1).count() }
+    sc.addSparkListener(listener)
+    try {
+      marker("begin")
+      sc.setJobDescription("caller")
+      val stages = Seq(
+        Stage("s", "1_count", { d => d.count(); d.withColumn("v2", col("id") * 2) }),
+        Stage("s", "2_assert", d => d.withColumn("bad", assert_true(col("id") < 0))),
+        Stage("t", "1_add", d => d.withColumn("v3", col("id") + 1)))
+      val sum = Pipeline.run(spark.range(4).toDF("id"), stages, (_, out) => out.count())
+      assert(sum.failures.map(_.substep) == Seq("2_assert"))
+      assert(sc.getLocalProperty(key) == "caller")
+      marker("done")
+      eventually(timeout(30.seconds))(assert(descs.contains("done")))
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setJobDescription(null)
+    }
+    val seen = descs.asScala.toSeq.dropWhile(_ != "begin").dropWhile(_ == "begin")
+      .takeWhile(_ != "done")
+    // runs of one description, in order: each stage's jobs (plan build
+    // and checkpoint, the failing one's too) carry its name; the
+    // callback's jobs carry the caller's
+    val runs = seen.foldLeft(Vector.empty[String])((acc, d) =>
+      if (acc.lastOption.contains(d)) acc else acc :+ d)
+    assert(runs == Seq("s:1_count", "caller", "s:2_assert", "t:1_add", "caller"))
   }
 }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,6 +10,7 @@ import graft.SparkSpec
 import graft.ops.{Enrich, FleetSnapshot, ScanMerge}
 import graft.sources.{CountingSnmpClient, DeterministicSnmpFake, DeviceClient, DevicePoll,
   DocumentIngest, SnmpPayload}
+import graft.tickets.TicketSearch
 
 /** The fleet refresh's stage shape, built from engine classes: enrich →
   * SNMP scan (supplies and colorant walks, cartridges, merge) →
@@ -80,6 +82,30 @@ class RefreshSpec extends SparkSpec {
       in.resolveSibling("sheet.parquet"))
     // 4 printers at a valid IP × (supplies, colorant)
     assert(CountingSnmpClient.polls.sum() == 8)
+  }
+
+  test("a second refresh in the same session compiles no class and does the same work") {
+    /** One refresh, the written store read back and a helpdesk lookup on
+      * it: (document, sheet, lookup rows, walks, classes compiled). */
+    def once(): (String, Seq[String], Seq[String], Long, Long) = {
+      val in = fixtureCopy()
+      val (docOut, sheetOut) = (in.resolveSibling("out.json"), in.resolveSibling("sheet.parquet"))
+      CountingSnmpClient.polls.reset()
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      refresh(new CountingSnmpClient, in, docOut, sheetOut)
+      val walks = CountingSnmpClient.polls.sum()
+      val store = DocumentIngest.printers(DocumentIngest.readDocument(spark, docOut.toString))
+      val found = TicketSearch.extract(TicketSearch.byField(store, "Branches_Grouped", "id", "105"))
+        .collect().map(_.mkString("|")).toSeq
+      val sheetOutRows = sheetRows(sheetOut)
+      (Files.readString(docOut), sheetOutRows, found, walks,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0)
+    }
+    val (doc1, sheet1, found1, walks1, _) = once()
+    val (doc2, sheet2, found2, walks2, compiled2) = once()
+    assert(compiled2 == 0, s"the warm refresh compiled $compiled2 classes")
+    assert(doc2 == doc1 && sheet2 == sheet1 && found2 == found1 && found1.size == 1)
+    assert(walks1 == 8 && walks2 == 8)
   }
 
   test("a client that answers differently on every call still yields a document and sheet that agree") {

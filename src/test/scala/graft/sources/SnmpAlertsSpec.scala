@@ -71,4 +71,22 @@ class SnmpAlertsSpec extends SparkSpec {
     assert(out("p2") == ("jammed", "warning"))
     assert(out("p3") == ("Normal", "informational"))
   }
+
+  test("an empty OID and an OID with no dot neither throw nor change the valid rows") {
+    val valid = Seq(
+      ("p1", "1.3.6.1.2.1.43.18.1.1.2.7", "4"),
+      ("p1", "1.3.6.1.2.1.43.18.1.1.8.7", "Tray jam"),
+      ("p2", "1.3.6.1.2.1.25.3.5.1.2.2", "68"))
+    // int-valued, so they reach the hr fallback's suffix parse
+    val odd = Seq(("p9", "", "3"), ("p9", "5", "2"), ("p9", "", "128"))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.where($"ip" =!= "p9").collect().map(_.mkString("|")).toSeq.sorted
+    val (v, all) = (valid.toDF("ip", "oid", "value"), (valid ++ odd).toDF("ip", "oid", "value"))
+    assert(rows(SnmpAlerts.alertTable(all)) == rows(SnmpAlerts.alertTable(v)))
+    assert(rows(SnmpAlerts.alertTable(v)).nonEmpty)
+    // neither odd OID has the two parts an alert-table row needs
+    assert(SnmpAlerts.alertTable(all).where($"ip" === "p9").count() == 0)
+    assert(rows(SnmpAlerts.hrErrorState(all)) == rows(SnmpAlerts.hrErrorState(v)))
+    assert(rows(SnmpAlerts.hrErrorState(v)).nonEmpty)
+  }
 }
