@@ -28,7 +28,7 @@ object SparkEntry {
     registry.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    registry.map(q => q.name -> q.oracle).toMap
 }

@@ -33,7 +33,9 @@ final case class StageResult(
     step: String, substep: String, ok: Boolean,
     elapsedS: Double, error: Option[String])
 
-final case class RunSummary(results: Seq[StageResult], out: DataFrame) {
+/** `warnings`: the plan's and the exclude parser's notices, never fatal. */
+final case class RunSummary(results: Seq[StageResult], out: DataFrame,
+    warnings: Seq[String] = Nil) {
   /** A11: all-ok flag + failure list (adapters/script_runner.py:82-84). */
   def allOk: Boolean = results.forall(_.ok)
   def failures: Seq[StageResult] = results.filterNot(_.ok)
@@ -157,7 +159,7 @@ object Pipeline {
     * block fails the next read instead of silently re-running the stage
     * (as an evicted cache would, polling the devices again). The blocks
     * are not released here: `RunSummary.out` and the frames handed to
-    * `checkpoint` read them, so the caller unpersists them when done.
+    * `checkpoint` read them, so the caller ([[Refresh]]) unpersists them.
     * `checkpoint` is called after each successful stage with that
     * stage's materialized output. Every Spark job a stage runs (its plan
     * build's and its checkpoint's) carries the job description

@@ -584,9 +584,9 @@ object CurationQueries {
        |  CASE WHEN NOT g.keep THEN 'gopher'
        |       WHEN l.kept_frac < 0.5 THEN 'boilerplate'
        |       WHEN NOT w.kept THEN 'dsir' END AS drop_reason
-       |FROM (${t72GopherRules.oracle.get}) g
-       |JOIN (${t73LineDedup.oracle.get}) l ON g.doc_id = l.doc_id
-       |JOIN (${t71DsirWeights.oracle.get}) w ON g.doc_id = w.doc_id
+       |FROM (${t72GopherRules.oracle}) g
+       |JOIN (${t73LineDedup.oracle}) l ON g.doc_id = l.doc_id
+       |JOIN (${t71DsirWeights.oracle}) w ON g.doc_id = w.doc_id
        |ORDER BY g.doc_id""".stripMargin) { (s, d) =>
     val g = t72GopherRules.run(s, d).select(col("doc_id"),
       col("keep").as("gopher_keep"))

@@ -250,8 +250,8 @@ object LmQueries {
        |    AND l.mean_bits <= $LmBandHi) AS lm_keep,
        |  (m.selected AND l.n_bigrams > 0 AND l.mean_bits >= $LmBandLo
        |    AND l.mean_bits <= $LmBandHi) AS final_keep
-       |FROM (${TextQueries.t28bManifestStar.oracle.get}) m
-       |JOIN (${t48BigramLm.oracle.get}) l ON m.doc_id = l.doc_id
+       |FROM (${TextQueries.t28bManifestStar.oracle}) m
+       |JOIN (${t48BigramLm.oracle}) l ON m.doc_id = l.doc_id
        |ORDER BY m.doc_id""".stripMargin) { (s, d) =>
     val lmKeep = col("n_bigrams") > 0 &&
       col("mean_bits") >= LmBandLo && col("mean_bits") <= LmBandHi

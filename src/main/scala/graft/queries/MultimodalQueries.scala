@@ -738,8 +738,8 @@ object MultimodalQueries {
     * measured trade, never an assumed one. */
   val m13cImageAnnRecall: QuerySpec = QuerySpec.sql(
     "m13c_image_ann_recall",
-    s"""WITH bf AS (${m13ImageAnn.oracle.get}),
-       |lsh AS (${m13bImageAnnLsh.oracle.get})
+    s"""WITH bf AS (${m13ImageAnn.oracle}),
+       |lsh AS (${m13bImageAnnLsh.oracle})
        |SELECT b.qid, count(l.nid) AS n_hits,
        |  CAST(count(l.nid) AS DOUBLE) / 3 AS recall_at_3
        |FROM (SELECT qid, nid FROM bf) b

@@ -34,9 +34,9 @@ object ScorecardQueries {
     s"""SELECT c.source, c.n_docs, c.n_selected, c.n_quality_drop,
        |  c.n_dup_drop, c.sel_rate, f.n_tokens, f.fertility,
        |  h.est AS distinct_3gram_est
-       |FROM (${TextQueries.t66SourceCuration.oracle.get}) c
-       |JOIN (${BpeQueries.t63SourceFertility.oracle.get}) f USING (source)
-       |JOIN (${SketchQueries.t62HllCardinality.oracle.get}) h USING (source)
+       |FROM (${TextQueries.t66SourceCuration.oracle}) c
+       |JOIN (${BpeQueries.t63SourceFertility.oracle}) f USING (source)
+       |JOIN (${SketchQueries.t62HllCardinality.oracle}) h USING (source)
        |ORDER BY source""".stripMargin) { (s, d) =>
     val c = TextQueries.t66SourceCuration.run(s, d)
       .select("source", "n_docs", "n_selected", "n_quality_drop",

@@ -2669,9 +2669,9 @@ object TextQueries {
     "t28_curation_manifest",
     s"""SELECT q.doc_id, q.keep, q.drop_reason, c.cluster_id, c.is_keeper,
        |  s.split, (q.keep AND c.is_keeper) AS selected
-       |FROM (${t19CurationVerdict.oracle.get}) q
-       |JOIN (${t21DupClusters.oracle.get}) c ON q.doc_id = c.doc_id
-       |JOIN (${t15HashSplit.oracle.get}) s ON q.doc_id = s.doc_id
+       |FROM (${t19CurationVerdict.oracle}) q
+       |JOIN (${t21DupClusters.oracle}) c ON q.doc_id = c.doc_id
+       |JOIN (${t15HashSplit.oracle}) s ON q.doc_id = s.doc_id
        |ORDER BY q.doc_id""".stripMargin) { (s, d) =>
     t19CurationVerdict.run(s, d)
       .select(col("doc_id"), col("keep"), col("drop_reason"))
@@ -2701,9 +2701,9 @@ object TextQueries {
     "t28b_manifest_star",
     s"""SELECT q.doc_id, q.keep, q.drop_reason, c.cluster_id, c.is_keeper,
        |  s.split, (q.keep AND c.is_keeper) AS selected
-       |FROM (${t19CurationVerdict.oracle.get}) q
-       |JOIN (${t32StarClusters.oracle.get}) c ON q.doc_id = c.doc_id
-       |JOIN (${t15HashSplit.oracle.get}) s ON q.doc_id = s.doc_id
+       |FROM (${t19CurationVerdict.oracle}) q
+       |JOIN (${t32StarClusters.oracle}) c ON q.doc_id = c.doc_id
+       |JOIN (${t15HashSplit.oracle}) s ON q.doc_id = s.doc_id
        |ORDER BY q.doc_id""".stripMargin) { (s, d) =>
     t19CurationVerdict.run(s, d)
       .select(col("doc_id"), col("keep"), col("drop_reason"))
@@ -2744,9 +2744,9 @@ object TextQueries {
        |    / COUNT(*) AS sel_rate
        |FROM (SELECT q.doc_id, q.keep, c.is_keeper, s.split,
        |        (q.keep AND c.is_keeper) AS selected
-       |      FROM (${t19CurationVerdict.oracle.get}) q
-       |      JOIN (${t32StarClusters.oracle.get}) c ON q.doc_id = c.doc_id
-       |      JOIN (${t15HashSplit.oracle.get}) s ON q.doc_id = s.doc_id) m
+       |      FROM (${t19CurationVerdict.oracle}) q
+       |      JOIN (${t32StarClusters.oracle}) c ON q.doc_id = c.doc_id
+       |      JOIN (${t15HashSplit.oracle}) s ON q.doc_id = s.doc_id) m
        |JOIN documents d ON m.doc_id = d.doc_id
        |GROUP BY 1
        |ORDER BY source""".stripMargin) { (s, d) =>

@@ -1618,8 +1618,8 @@ object VectorQueries {
     * drift from the operators it scores. */
   val t20AnnRecall: QuerySpec = QuerySpec.sql(
     "t20_ann_recall",
-    s"""WITH bf AS (${t5AnnBruteForce.oracle.get}),
-       |ivf AS (${t18AnnIvf.oracle.get})
+    s"""WITH bf AS (${t5AnnBruteForce.oracle}),
+       |ivf AS (${t18AnnIvf.oracle})
        |SELECT b.qid, count(i.nid) AS n_hits,
        |  CAST(count(i.nid) AS DOUBLE) / 3 AS recall_at_3
        |FROM (SELECT qid, nid FROM bf WHERE rank <= 3) b

@@ -27,11 +27,9 @@ object SheetIngest {
 
   final case class SheetSpec(keys: Seq[String], keyColumn: String)
 
-  /** Company/Branches specs (import_from_xlsm.py:14-23). */
+  /** The Company sheet's spec (import_from_xlsm.py:14-23). */
   val CompanySpec: SheetSpec = SheetSpec(
     Seq("ID", "Floor", "Printer IP", "Type", "Serial", "Comment"), "ID")
-  val BranchesSpec: SheetSpec = SheetSpec(
-    Seq("ID", "Name", "Printer IP", "BO IP", "Type", "Serial", "Comment"), "ID")
 
   /** A12 — elect the header row: score = #cells matching expected
     * headers; the key column must be present; argmax (first on ties). */

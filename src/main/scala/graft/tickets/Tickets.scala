@@ -60,7 +60,9 @@ object TicketSearch {
           .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
         val idInt = pyInt(col("ID"), numericId)
         val vInt = pyInt(v, numericSource = false)
-        when(idInt.isNotNull && vInt.isNotNull, idInt === vInt)
+        // as decimal strings: a long literal is inlined into generated
+        // code (new classes per value), a string one is not
+        when(idInt.isNotNull && vInt.isNotNull, idInt.cast("string") === vInt.cast("string"))
           .otherwise(s("ID") === pyStrip(v))
       case "serial" => upper(s("Serial")) === upper(pyStrip(v))
       case "ip"     => s("Printer IP") === pyStrip(v)

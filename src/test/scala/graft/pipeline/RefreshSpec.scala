@@ -3,32 +3,33 @@ package graft.pipeline
 import java.nio.file.{Files, Path, StandardCopyOption}
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.ops.{Enrich, FleetSnapshot, ScanMerge}
-import graft.sources.{CountingSnmpClient, DeterministicSnmpFake, DeviceClient, DevicePoll,
-  DocumentIngest, SnmpPayload}
+import graft.ops.FleetSnapshot
+import graft.sources.{CountingSnmpClient, DeterministicSnmpFake, DeviceClient, DocumentIngest}
 import graft.tickets.TicketSearch
 
-/** The fleet refresh's stage shape, built from engine classes: enrich →
-  * SNMP scan (supplies and colorant walks, cartridges, merge) →
-  * snapshot → upsert through `Pipeline.run`, then the document and the
-  * sheet write-back. Each stage runs once, so both writes read one
-  * device snapshot. */
+/** The fleet refresh through its engine entry point, [[Refresh]]: the
+  * reference's numbered plan (2 addstojson, 3 tonerFinder, 4
+  * convertToExcel), `--exclude` pruning, then the document and the sheet
+  * write-back. Each stage runs once, so both writes read one device
+  * snapshot. */
 class RefreshSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val employees = Seq(("105", "רות כהן", "0530000001"), ("330", "", "0521111111"))
     .toDF("id", "name", "phone")
+  /** Raw location rows under the reference sheet's Hebrew headers. */
   private lazy val locations = Seq(
     (0L, "105", "אלנבי 9, תל אביב 6100002", "טלפוניה", "משני", "88001"),
     (1L, "330", "דיזנגוף 50 תל אביב", "אינטרנט", "", "55001"))
-    .toDF("row_idx", "branch_id", "address", "primary_desc", "secondary_desc", "subscriber")
+    .toDF("row_idx", "מס' סניף", "כתובת", "תאור שרות ראשי", "תאור שרות משני", "מספר מנוי")
   private lazy val sheet = Seq(("3", "HQ", "old"), ("7", "HQ 2", "old"),
     ("105", "Branch 105", "old"), ("330", "Branch 330", "old"), ("404", "gone", "old"))
     .toDF("ID", "Name", "Status")
+  /** The fixture's models at a valid IP: 4 printers. */
+  private val models = Set("M404dn", "MFC-L9570CDW")
 
   /** A copy of the fixture document in a fresh directory. */
   private def fixtureCopy(): Path = {
@@ -38,31 +39,28 @@ class RefreshSpec extends SparkSpec {
     p
   }
 
-  /** Refresh `docIn`, then write the document to `docOut` and the sheet
-    * to `sheetOut`, in the fleet job's order. */
-  private def refresh(client: DeviceClient, docIn: Path, docOut: Path, sheetOut: Path): Unit = {
-    var scanned: DataFrame = null
-    val stages = Seq(
-      Stage("enrich", "1_employees", df => Enrich.employees(df, employees).drop("changed")),
-      Stage("enrich", "2_locations", df => Enrich.locations(df, locations)),
-      Stage("tonerFinder", "1_snmp_toner", { df =>
-        val devs = DocumentIngest.withValidIp(df)
-        val walk = DevicePoll.walk(spark, devs, SnmpPayload.SuppliesBase, client, 2)
-          .unionByName(DevicePoll.walk(spark, devs, SnmpPayload.ColorantBase, client, 2))
-        val carts = SnmpPayload.cartridges(walk).withColumn("status", lit("online"))
-        ScanMerge(df, carts, DocumentIngest.hasValidIp(df))
-      }),
-      Stage("extract", "snapshot", { df => scanned = df; FleetSnapshot(df) }),
-      Stage("load", "upsert", df => FleetSnapshot.updateSheet(sheet, FleetSnapshot.upsertIdMap(df))))
-    val doc = DocumentIngest.printers(DocumentIngest.readDocument(spark, docIn.toString))
-    val summary = Pipeline.run(doc, stages)
+  /** Refresh `docIn` into `docOut` and `sheetOut`; every stage must pass. */
+  private def refresh(client: DeviceClient, docIn: Path, docOut: Path, sheetOut: Path,
+      excludes: Seq[String] = Nil, models: Set[String] = models): RunSummary = {
+    val summary = Refresh(docIn.toString, docOut.toString, sheetOut.toString,
+      employees, locations, sheet, client, models, excludes)
     assert(summary.allOk, summary.failures.mkString("; "))
-    DocumentIngest.writeDocument(scanned, docOut.toString)
-    summary.out.write.parquet(sheetOut.toString)
+    summary
   }
 
   private def sheetRows(p: Path): Seq[String] =
     spark.read.parquet(p.toString).collect().map(_.mkString("|")).toSeq.sorted
+
+  /** (group, row_idx) → the printer's `printerInfo` as JSON. */
+  private def printerInfos(doc: Path): Map[(String, String), String] =
+    DocumentIngest.printers(DocumentIngest.readDocument(spark, doc.toString))
+      .select(col("group"), col("row_idx"), to_json(col("printerInfo"))).collect()
+      .map(r => (r.getString(0), r.get(1).toString) -> r.getString(2)).toMap
+
+  /** The `storeInfo` field of the printer with `ID` = `id`. */
+  private def storeField(doc: Path, id: String, field: String): String =
+    DocumentIngest.printers(DocumentIngest.readDocument(spark, doc.toString))
+      .where(col("ID") === id).select(col(s"storeInfo.$field")).head().getString(0)
 
   test("an in-place refresh writes the document and sheet of one that writes elsewhere") {
     val client = new DeterministicSnmpFake(failEvery = 0)
@@ -117,6 +115,65 @@ class RefreshSpec extends SparkSpec {
     FleetSnapshot.updateSheet(sheet, FleetSnapshot.upsertIdMap(FleetSnapshot(written)))
       .write.parquet(fromDoc.toString)
     assert(sheetRows(sheetOut) == sheetRows(fromDoc))
+  }
+
+  test("a refresh releases every block its run pinned") {
+    val in = fixtureCopy()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val summary = refresh(new DeterministicSnmpFake(failEvery = 0), in,
+      in.resolveSibling("out.json"), in.resolveSibling("sheet.parquet"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    // what it returns reads the written sheet, not a released block
+    assert(summary.out.collect().map(_.mkString("|")).toSeq.sorted ==
+      sheetRows(in.resolveSibling("sheet.parquet")))
+  }
+
+  test("excluding step 3 skips the scan: no device is polled and every printerInfo stays as read") {
+    val in = fixtureCopy()
+    CountingSnmpClient.polls.reset()
+    val summary = refresh(new CountingSnmpClient, in, in.resolveSibling("out.json"),
+      in.resolveSibling("sheet.parquet"), excludes = Seq("3"))
+    assert(summary.results.map(r => s"${r.step}:${r.substep}") == Seq(
+      "addstojson:1_employees", "addstojson:2_locations", "convertToExcel:update_from_json"))
+    assert(CountingSnmpClient.polls.sum() == 0)
+    assert(printerInfos(in.resolveSibling("out.json")) == printerInfos(in))
+  }
+
+  test("excluding 2.1 skips only the employees stage") {
+    val in = fixtureCopy()
+    val out = in.resolveSibling("out.json")
+    CountingSnmpClient.polls.reset()
+    val summary = refresh(new CountingSnmpClient, in, out, in.resolveSibling("sheet.parquet"),
+      excludes = Seq("2.1"))
+    assert(summary.results.map(_.substep) == Seq("2_locations", "1_snmp_toner", "update_from_json"))
+    assert(CountingSnmpClient.polls.sum() == 8)
+    assert(storeField(out, "105", "Manager") == storeField(in, "105", "Manager"))
+    assert(storeField(out, "105", "Location") == "אלנבי 9, תל אביב")
+  }
+
+  test("an invalid exclude token is reported and the whole plan still runs") {
+    val in = fixtureCopy()
+    CountingSnmpClient.polls.reset()
+    val summary = refresh(new CountingSnmpClient, in, in.resolveSibling("out.json"),
+      in.resolveSibling("sheet.parquet"), excludes = Seq("tonerFinder, 3.x"))
+    assert(summary.results.size == 4)
+    assert(summary.warnings.filter(_.startsWith("Ignoring invalid --exclude value")) == Seq(
+      "Ignoring invalid --exclude value: tonerFinder", "Ignoring invalid --exclude value: 3.x"))
+    assert(CountingSnmpClient.polls.sum() == 8)
+  }
+
+  test("a printer at a valid IP whose Type is outside the model set is neither polled nor changed") {
+    val in = fixtureCopy()
+    val out = in.resolveSibling("out.json")
+    CountingSnmpClient.polls.reset()
+    refresh(new CountingSnmpClient, in, out, in.resolveSibling("sheet.parquet"),
+      models = Set("M404DN"))
+    // 3 M404dn printers at a valid IP × (supplies, colorant); the
+    // MFC-L9570CDW at 10.5.0.12 (Branches_Grouped row 0) is left alone
+    assert(CountingSnmpClient.polls.sum() == 6)
+    val (was, now) = (printerInfos(in), printerInfos(out))
+    assert(now(("Branches_Grouped", "0")) == was(("Branches_Grouped", "0")))
+    assert(now(("Company_Grouped", "2")) != was(("Company_Grouped", "2")))
   }
 }
 

@@ -1,5 +1,7 @@
 package graft.tickets
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 import graft.SparkSpec
 import graft.sources.DocumentIngest
 
@@ -27,6 +29,19 @@ class TicketsSpec extends SparkSpec {
     // int(7.9) == int("7") → truncation, not rounding
     assert(TicketSearch.byField(df, "Company_Grouped", "id", "7").count() == 1)
     assert(TicketSearch.byField(df, "Company_Grouped", "id", "8").count() == 1)
+  }
+
+  test("P7: an id lookup with a value not seen before compiles no class") {
+    def lookup(id: String) = TicketSearch.extract(
+      TicketSearch.byField(printers, "Branches_Grouped", "id", id)).collect().toSeq
+    val warm = lookup("212")
+    val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val hit = lookup("330")
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+    assert(compiled == 0, s"the second lookup compiled $compiled classes")
+    assert(warm.map(_.getAs[String]("branch_id")) == Seq("212"))
+    assert(hit.map(r => (r.getAs[String]("branch_id"), r.getAs[String]("model"))) ==
+      Seq(("330", "M404dn")))
   }
 
   test("P7: serial is case-insensitive, ip exact") {
