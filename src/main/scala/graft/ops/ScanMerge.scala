@@ -14,9 +14,14 @@ import graft.sources.DocumentIngest
   * printers are untouched (their printerInfo stays null if it was
   * null: `ensure_printer_info` only runs on selected records).
   *
-  * Scale: one equi-join keyed by device IP; both sides are fleet-sized
-  * and pre-partitioned by the same key, so AQE plans a local join after
-  * the poll's mapPartitions stage. */
+  * Scale: one equi-join keyed by device IP. The printers side keys on
+  * the computed `__ip`, so it gets its own hash Exchange. The results
+  * side (from a poll, an `ExistingRDD` scan with no known partitioning)
+  * is hashed by IP once, by `SnmpPayload.cartridges`' `groupBy(ip)`,
+  * and [[onePerIp]] rides that partitioning. The initial plan is a
+  * sort-merge join; once AQE has the results stage's size, a
+  * fleet-sized results side is broadcast and the printers' shuffle is
+  * read locally. */
 object ScanMerge {
 
   /** printerInfo widened to the canonical fields: a register fresh from

@@ -14,14 +14,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * compose built-ins where semantics allow → native Expression with
   * doGenCode → never a UDF. */
 
-/** Σᵢ bit_count(a[i] & b[i]) over the common prefix of two
-  * `array<bigint>` columns — the t4c bitmask-verify kernel. Replaces
+/** Σᵢ bit_count(a[i] & b[i]) over two equal-length `array<bigint>`
+  * columns — the t4c bitmask-verify kernel. Replaces
   * `aggregate(zip_with(m1, m2, (a,b) -> bit_count(a & b)), 0, +)`:
   * identical integers (Long.bitCount on the same AND words, long sum
   * associative), no lambda dispatch, no zipped-array allocation per
-  * candidate pair. Null arrays propagate null; elements are non-null
-  * by construction (mask builders emit dense arrays). Registered as
-  * SQL `long_and_popcount`. */
+  * candidate pair. Arrays of different lengths give null, as that
+  * composition does (zip_with pads the shorter side with nulls); null
+  * arrays propagate null; elements are non-null by construction (mask
+  * builders emit dense arrays). Registered as SQL
+  * `long_and_popcount`. */
 case class LongArrayAndPopcount(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
 
@@ -29,10 +31,13 @@ case class LongArrayAndPopcount(left: Expression, right: Expression)
 
   override def dataType: DataType = LongType
 
+  override def nullable: Boolean = true
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
+    if (n != y.numElements()) return null
     var s = 0L
     var i = 0
     while (i < n) {
@@ -48,12 +53,16 @@ case class LongArrayAndPopcount(left: Expression, right: Expression)
       val n = ctx.freshName("n")
       val s = ctx.freshName("s")
       s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += java.lang.Long.bitCount($x.getLong($i) & $y.getLong($i));
+         |int $n = $x.numElements();
+         |if ($n != $y.numElements()) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  long $s = 0L;
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    $s += java.lang.Long.bitCount($x.getLong($i) & $y.getLong($i));
+         |  }
+         |  ${ev.value} = $s;
          |}
-         |${ev.value} = $s;
        """.stripMargin
     })
 
@@ -71,9 +80,10 @@ case class LongArrayAndPopcount(left: Expression, right: Expression)
   * Replaces the posexplode → 3-key broadcast join → re-aggregate per
   * candidate per round with M array reads + adds inside the generated
   * stage; the sum is the same M longs in the same fixed order, so the
-  * result is bit-identical. A code outside 0..k−1 is a programming
-  * error and throws (never silently wrong). Registered as SQL
-  * `long_lut_sum(codes, lut, k)`. */
+  * result is bit-identical. A code outside 0..k−1, or a `lut` shorter
+  * than M·k, is a programming error and throws naming the bad code or
+  * length (the unchecked array read would return garbage). Registered
+  * as SQL `long_lut_sum(codes, lut, k)`. */
 case class LongArrayLutSum(first: Expression, second: Expression,
     third: Expression)
     extends TernaryExpression with ImplicitCastInputTypes {
@@ -88,10 +98,13 @@ case class LongArrayLutSum(first: Expression, second: Expression,
     val lut = l.asInstanceOf[ArrayData]
     val k = kv.asInstanceOf[Int]
     val n = codes.numElements()
+    LongArrayLutSum.checkLut(lut.numElements(), n, k)
     var s = 0L
     var i = 0
     while (i < n) {
-      s += lut.getLong(i * k + codes.getLong(i).toInt)
+      val code = codes.getLong(i)
+      LongArrayLutSum.checkCode(code, i, k)
+      s += lut.getLong(i * k + code.toInt)
       i += 1
     }
     s
@@ -102,11 +115,16 @@ case class LongArrayLutSum(first: Expression, second: Expression,
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
       val s = ctx.freshName("s")
+      val code = ctx.freshName("code")
+      val obj = "graft.plans.LongArrayLutSum"
       s"""
          |int $n = $c.numElements();
+         |$obj.checkLut($l.numElements(), $n, $k);
          |long $s = 0L;
          |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $l.getLong($i * $k + (int) $c.getLong($i));
+         |  long $code = $c.getLong($i);
+         |  $obj.checkCode($code, $i, $k);
+         |  $s += $l.getLong($i * $k + (int) $code);
          |}
          |${ev.value} = $s;
        """.stripMargin
@@ -117,6 +135,18 @@ case class LongArrayLutSum(first: Expression, second: Expression,
     copy(first = f, second = s, third = t)
 
   override def prettyName: String = "long_lut_sum"
+}
+
+object LongArrayLutSum {
+  def checkLut(lutLen: Int, m: Int, k: Int): Unit =
+    if (lutLen.toLong < m.toLong * k)
+      throw new IllegalArgumentException(
+        s"long_lut_sum: lut has $lutLen entries, $m codes need ${m.toLong * k}")
+
+  def checkCode(code: Long, i: Int, k: Int): Unit =
+    if (code < 0 || code >= k)
+      throw new IllegalArgumentException(
+        s"long_lut_sum: code $code at position $i is outside 0..${k - 1}")
 }
 
 /** Sliding-window RIGHTMOST-MIN fingerprints — the winnowing kernel

@@ -577,7 +577,7 @@ object ParserQueries {
         .select(concat(lit("10.0.0."), (col("id") + 100).cast("string")).as("ip"))
         .where(col("ip").isin("10.0.0.101", "10.0.0.105", "10.0.0.110"))
       DevicePoll.walk(s, devices, SnmpPayload.SuppliesBase,
-        new DeterministicSnmpFake(failEvery = 0), parallelism = 4)
+        new DeterministicSnmpFake(failEvery = 0))
         .orderBy("ip", "oid", "value")
     }
   }

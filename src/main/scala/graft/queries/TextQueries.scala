@@ -1583,7 +1583,7 @@ object TextQueries {
     * [[bucketFanIn]] is the single accounting entry point, run as a
     * pre-flight by the decade paths that actually face hot corpora
     * ([[graft.tools.ScaleCheck]]'s twin sweep SKIPs above
-    * [[LshHotBucketWarn]]; the [[graft.tools.FanIn]] CLI reports). */
+    * [[LshHotBucketWarn]]). */
   private def lshCandidatesOf(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val bands = bandIndexOf(docs).select("doc_id", "band", "bkey")

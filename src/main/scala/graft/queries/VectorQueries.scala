@@ -32,8 +32,7 @@ import graft.Tables
 object VectorQueries {
 
   /** Per-vector scaling: float coords → longs at 1e6 (rounding is the
-    * shared [[graft.functions.ExactNum]] convention). `private[graft]`
-    * so measurement tools (SemDedupStats) can build the same frame.
+    * shared [[graft.functions.ExactNum]] convention).
     * NULL vectors fail fast here — the single entry every vector path
     * scales through — instead of flowing a NULL eL into a codegen'd
     * dot or a mapPartitions argmin and NPEing without row context. */
@@ -221,8 +220,7 @@ object VectorQueries {
     * a pure k-NN graph on a CLUSTERED corpus has no metric gradient
     * between clusters, so fixed-entry greedy walks cannot navigate to
     * the query's island — measured on the ×10 decade corpus: recall
-    * 0.00 from fixed entries, 1.00 routed (ServeLadder, COVERAGE
-    * r19). */
+    * 0.00 from fixed entries, 1.00 routed (COVERAGE r19). */
   private[graft] def annLshEntries(corpus: DataFrame, queries: DataFrame,
       bits: Int, tables: Int, bucketCap: Int, maxEntries: Int): DataFrame = {
     val ck = lshKeyed(corpus, bits, tables)
@@ -944,7 +942,7 @@ object VectorQueries {
     * gradient for a greedy walk to climb, so t83's fixed-entry beam
     * search cannot navigate to the query's island (measured on the
     * ×10 decade corpus: recall 0.00 fixed-entry vs 1.00 routed —
-    * ServeLadder, COVERAGE r19; sf0.001's RANDOM embeddings are the
+    * COVERAGE r19; sf0.001's RANDOM embeddings are the
     * easy case where fixed entries suffice). Every deployed graph-ANN
     * system pairs the graph with a coarse router for exactly this
     * reason (DiskANN's quantizer-selected entry, HNSW's upper-layer
@@ -1032,8 +1030,8 @@ object VectorQueries {
     * `routed` carries each new vector's per-query entry pairs (the
     * [[annLshEntries]] router) into the connect walk — REQUIRED on
     * clustered corpora: the fixed-entry walk measures recall 0.000
-    * across every decade of the clustered scale corpus (ServeLadder,
-    * COVERAGE r19), so an unrouted insert connects new vectors to the
+    * across every decade of the clustered scale corpus (COVERAGE r19),
+    * so an unrouted insert connects new vectors to the
     * wrong metric island, which then poisons routed serve for those
     * nodes too (VERDICT r19 item 1). t84 and the insert door both
     * route. `corpusRows` as in [[knnServeVecs]]. */
@@ -2485,25 +2483,6 @@ object VectorQueries {
 
   // ---- T87: PQ-RESIDENT graph serve (ADC beam, exact final rerank) ----
 
-  /** Tool seam (ServeLadder --pq): the t87 composition's PQ half —
-    * (resident codes, per-query LUT) for [[knnServePqVecs]] over the
-    * corpus at `d` and the given raw (vec_id, embedding) query rows.
-    * Codes are checkpointed (the resident artifact whose footprint
-    * the ladder measures against the full vector table). */
-  private[graft] def pqServeModel(s: SparkSession, d: String,
-      queries: DataFrame): (DataFrame, DataFrame) = {
-    val emb = embL(s, d)
-    val cb = pqCodebook(s, d, emb)
-    val enc = pqPackedReused(s, d, emb) // standing codes (t44's artifact)
-    val lut = pqSubvecs(queries.select(col("vec_id"),
-        scaleL(col("embedding")).as("eL")))
-      .withColumnRenamed("vec_id", "qid")
-      .join(broadcast(cb), "sub")
-      .select(col("qid"), col("sub"), col("cid"),
-        graft.ops.KMeans.distq(col("sv"), col("cL")).as("ldist"))
-    (enc, lut)
-  }
-
   /** PACK the long-form encode rows to ONE row per vector —
     * (vec_id, codes), codes ordered by subspace. The resident serve
     * artifact: the long form carries ~90 B of row overhead per
@@ -2533,7 +2512,7 @@ object VectorQueries {
     * per query. `enc` = (vec_id, codes) PACKED resident codes
     * ([[pqPacked]]), `lut` = (qid, sub, cid, ldist) per-query tables;
     * walk/routing/release semantics exactly as [[knnServeVecs]]. */
-  private[graft] def knnServePqVecs(e: DataFrame, edges: DataFrame,
+  private def knnServePqVecs(e: DataFrame, edges: DataFrame,
       enc: DataFrame, lut: DataFrame,
       qvecs: DataFrame, entries: DataFrame,
       beam: Int, rounds: Int, k: Int,

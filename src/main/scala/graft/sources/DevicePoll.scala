@@ -12,16 +12,18 @@ import org.apache.spark.sql.types._
   * (plugins/tonerFinder/toner_hp.py:75-93 — one device at a time,
   * worst case timeout×retries ≈ 60 s per offline device,
   * adapters/snmp_client.py:11-12). Here the fan-out is a
-  * `mapPartitions` over the device table: N partitions = N concurrent
-  * pollers, per-device failure degrades to zero rows (the reference's
-  * try/except→offline default, toner_hp.py:62-66) instead of failing
-  * the job.
+  * `mapPartitions` over the device table with one poller per task slot
+  * (a slot runs one task at a time, so more partitions than slots add
+  * tasks, not concurrent pollers); per-device failure degrades to zero
+  * rows (the reference's try/except→offline default,
+  * toner_hp.py:62-66) instead of failing the job.
   *
   * Scale notes:
   *  - the filters P3/P4 MUST be applied before calling this (Catalyst
   *    cannot push predicates through the opaque partition function);
-  *  - `parallelism` bounds concurrent network clients, independent of
-  *    the table's upstream partitioning;
+  *  - concurrent network clients are bounded by the session's task
+  *    slots (`defaultParallelism`: N for `local[N]`, the executor cores
+  *    on a cluster), independent of the table's upstream partitioning;
   *  - this is the only poll path: callers narrow the device frame
   *    before the fan-out (`DocumentIngest.withValidIp`, `isin` lists),
   *    so a pushdown-capable source would add a second implementation
@@ -44,14 +46,15 @@ object DevicePoll {
     StructField("oid", StringType, nullable = false),
     StructField("value", StringType, nullable = true)))
 
-  /** Fan out `client.walk(ip, baseOid)` across `parallelism` pollers.
-    * Input: any DataFrame with a string `ip` column (deduplicated —
-    * one poll per device even if upstream has repeats). One shuffle
-    * hashes every copy of an IP into the same poller, which then polls
-    * each distinct IP of its partition once. */
+  /** Fan out `client.walk(ip, baseOid)` across one poller per task
+    * slot. Input: any DataFrame with a string `ip` column
+    * (deduplicated — one poll per device even if upstream has repeats).
+    * One shuffle hashes every copy of an IP into the same poller, which
+    * then polls each distinct IP of its partition once. */
   def walk(spark: SparkSession, devices: DataFrame, baseOid: String,
-      client: DeviceClient, parallelism: Int = 32): DataFrame = {
-    val ips = devices.select("ip").repartition(parallelism, col("ip"))
+      client: DeviceClient): DataFrame = {
+    val ips = devices.select("ip")
+      .repartition(spark.sparkContext.defaultParallelism, col("ip"))
     val rows = ips.rdd.mapPartitions { it =>
       it.map(_.getString(0)).distinct.flatMap { ip =>
         Try(client.walk(ip, baseOid)) match {

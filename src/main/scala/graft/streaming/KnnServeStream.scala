@@ -42,9 +42,9 @@ object KnnServeStream {
     * entries ([[VectorQueries.annLshEntries]] at (routeBits,
     * routeTables) — the t85 composition) to each batch's round-0
     * beam: REQUIRED on clustered corpora, where the fixed-entry walk
-    * measures recall 0.000 at every decade (ServeLadder, COVERAGE
-    * r19). `corpusRows` pre-answers the broadcast-regime decision so
-    * a long-running stream doesn't run one corpus count job per
+    * measures recall 0.000 at every decade (COVERAGE r19).
+    * `corpusRows` pre-answers the broadcast-regime decision so a
+    * long-running stream doesn't run one corpus count job per
     * micro-batch (ADVICE r19) — pass it once at door wiring time.
     * Output is t83's shape: (query_id, rank, nid, cosine). */
   def serveBatch(batch: DataFrame, e: DataFrame, edges: DataFrame,

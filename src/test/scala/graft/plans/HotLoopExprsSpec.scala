@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -53,6 +54,46 @@ class HotLoopExprsSpec extends SparkSpec {
       .groupBy("id").agg(sum("ld").as("s0"))
     val bad = fast.join(ref, "id").filter(col("s") =!= col("s0")).count()
     assert(bad == 0)
+  }
+
+  test("long_and_popcount of arrays of different lengths is null, as the composition is") {
+    // 3 words against 2: zip_with pads with null, so the sum is null
+    val a = Array(7L, 7L, 7L)
+    val b = Array(7L, 7L)
+    val df = Seq((a, b), (b, a), (b, b)).toDF("a", "b").localCheckpoint()
+    val got = df.selectExpr("long_and_popcount(a, b)",
+        "CAST(aggregate(zip_with(a, b, (x, y) -> bit_count(x & y)), " +
+          "0, (acc, v) -> acc + v) AS BIGINT)")
+      .collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq
+    assert(got == Seq((None, None), (None, None), (Some(6L), Some(6L))))
+    // the interpreted path
+    assert(LongArrayAndPopcount(Literal(a), Literal(b)).eval() == null)
+    assert(LongArrayAndPopcount(Literal(b), Literal(b)).eval() == 6L)
+  }
+
+  test("long_lut_sum throws on a code outside 0..k-1 or a short lut") {
+    val k = 4
+    val lut = Array.tabulate(2 * k)(_.toLong)
+    // UnsafeArrayData inputs, so the generated code runs
+    val df = Seq((Array(1L, 2L), lut), (Array(1L, k.toLong), lut))
+      .toDF("codes", "lut").localCheckpoint()
+    val ok = df.limit(1).selectExpr(s"long_lut_sum(codes, lut, $k)")
+    assert(ok.head.getLong(0) == 1L + (k + 2))
+    val bad = intercept[Exception] {
+      df.selectExpr(s"long_lut_sum(codes, lut, $k)").collect()
+    }
+    assert(bad.getMessage.contains(s"code $k at position 1"), bad.getMessage)
+    val short = intercept[Exception] {
+      df.selectExpr(s"long_lut_sum(codes, slice(lut, 1, ${2 * k - 1}), $k)")
+        .collect()
+    }
+    assert(short.getMessage.contains(s"lut has ${2 * k - 1} entries"),
+      short.getMessage)
+    // the interpreted path
+    val e = intercept[IllegalArgumentException] {
+      LongArrayLutSum(Literal(Array(-1L, 0L)), Literal(lut), Literal(k)).eval()
+    }
+    assert(e.getMessage.contains("code -1 at position 0"))
   }
 
   test("winnow_min_windows equals the zip_with/array_min composition") {

@@ -73,7 +73,7 @@ class KnnInsertSpec extends SparkSpec {
     // vectors inserted through the ROUTED walk; forward edges scored
     // against the base-corpus brute truth. Random embeddings are the
     // documented EASY case (the clustered decade corpus is where
-    // routing is load-bearing — ServeLadder's ×10 row); this floor
+    // routing is load-bearing — COVERAGE r19's ×10 row); this floor
     // pins the easy case so a walk regression is visible in CI.
     // Measured 0.740 routed (0.700 unrouted) — floor 0.70.
     val sf = "/root/testdata/sf0.001"

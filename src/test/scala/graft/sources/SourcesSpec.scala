@@ -72,8 +72,7 @@ class SourcesSpec extends SparkSpec {
   test("S5: device fan-out degrades per-device failure to zero rows") {
     val client = new DeterministicSnmpFake(failEvery = 2) // even hashes fail
     val devices = Seq("a", "b", "c", "d", "e").toDF("ip")
-    val walk = DevicePoll.walk(spark, devices, SnmpPayload.SuppliesBase,
-      client, parallelism = 3)
+    val walk = DevicePoll.walk(spark, devices, SnmpPayload.SuppliesBase, client)
     val polled = walk.select("ip").distinct().as[String].collect().toSet
     val expected = Seq("a", "b", "c", "d", "e")
       .filter(ip => math.abs(ip.hashCode) % 2 != 0).toSet
@@ -86,13 +85,13 @@ class SourcesSpec extends SparkSpec {
       .toDF("ip")
     CountingSnmpClient.polls.reset()
     val all = DevicePoll.walk(spark, devices, SnmpPayload.SuppliesBase,
-      new CountingSnmpClient, parallelism = 2)
+      new CountingSnmpClient)
     assert(all.select("ip").distinct().count() == 3)
     assert(CountingSnmpClient.polls.sum() == 3)
 
     CountingSnmpClient.polls.reset()
     val kept = DevicePoll.walk(spark, devices.where($"ip".isin("10.0.0.2", "10.0.0.3")),
-      SnmpPayload.SuppliesBase, new CountingSnmpClient, parallelism = 2)
+      SnmpPayload.SuppliesBase, new CountingSnmpClient)
     assert(kept.select("ip").distinct().as[String].collect().toSet ==
       Set("10.0.0.2", "10.0.0.3"))
     assert(CountingSnmpClient.polls.sum() == 2)
@@ -104,9 +103,22 @@ class SourcesSpec extends SparkSpec {
     assert(spread.rdd.getNumPartitions == 3)
     CountingSnmpClient.polls.reset()
     val walked = DevicePoll.walk(spark, spread, SnmpPayload.SuppliesBase,
-      new CountingSnmpClient, parallelism = 2)
+      new CountingSnmpClient)
     assert(walked.select("ip").distinct().count() == 3)
     assert(CountingSnmpClient.polls.sum() == 3)
+  }
+
+  test("S5: the fan-out runs one poller per task slot, whatever the input's partitioning") {
+    val slots = spark.sparkContext.defaultParallelism
+    val ips = (1 to 20).map(i => s"10.0.0.$i")
+    for (n <- Seq(1, 7)) {
+      val devices = spark.sparkContext.parallelize(ips, n).toDF("ip")
+      assert(devices.rdd.getNumPartitions == n)
+      val walked = DevicePoll.walk(spark, devices, SnmpPayload.SuppliesBase,
+        new DeterministicSnmpFake(failEvery = 0))
+      assert(walked.rdd.getNumPartitions == slots, s"input partitions $n")
+      assert(walked.select("ip").distinct().count() == ips.size)
+    }
   }
 
   private val S = SnmpPayload.SuppliesBase
@@ -122,8 +134,8 @@ class SourcesSpec extends SparkSpec {
   test("A1/J4/F9-F11: SNMP walk rows → ordered cartridge structs") {
     val client = new DeterministicSnmpFake(failEvery = 0)
     val devices = Seq("10.0.1.7").toDF("ip")
-    val supplies = DevicePoll.walk(spark, devices, SnmpPayload.SuppliesBase, client, 1)
-    val colorant = DevicePoll.walk(spark, devices, SnmpPayload.ColorantBase, client, 1)
+    val supplies = DevicePoll.walk(spark, devices, SnmpPayload.SuppliesBase, client)
+    val colorant = DevicePoll.walk(spark, devices, SnmpPayload.ColorantBase, client)
     // OIDs that end early (a truncated device answer) are skipped
     val truncated = Seq(("10.0.1.7", "1.3.6.1.2.1.43.11", "x"),
       ("10.0.1.7", "1.3.6.1.2.1.43.12.1", "y"))
@@ -201,8 +213,8 @@ class SourcesSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     val devices = Seq("10.0.0.1", "10.0.0.2", "10.0.0.3").toDF("ip")
     val client = new CountingSnmpClient
-    val walk = DevicePoll.walk(spark, devices, S, client, 2)
-      .union(DevicePoll.walk(spark, devices, C, client, 2))
+    val walk = DevicePoll.walk(spark, devices, S, client)
+      .union(DevicePoll.walk(spark, devices, C, client))
     val carts = SnmpPayload.cartridges(walk)
     CountingSnmpClient.polls.reset()
     assert(carts.collect().length == 3)
