@@ -1209,17 +1209,10 @@ object Multimodal {
   def audioHashOf(bytes: Array[Byte]): Option[Long] =
     aHash64Pcm(pcmSamples(bytes))
 
-  final case class AudioSig(mediaId: Long, nSamples: Int, sig: String)
-
-  /** Exact PCM signature — the audio analogue of [[rasterSignature]]:
-    * decode to samples and md5 the canonical little-endian 16-bit
-    * stream, so container-level byte differences that decode to the
-    * same PCM hash equal (and byte-identical re-ingestions trivially
-    * do). Decode failures / empty PCM yield no rows (the
-    * [[featuresPcm]] convention). */
   /** md5 of the canonical little-endian 16-bit render of a PCM sample
-    * array — the ONE exact-audio-identity definition
-    * ([[audioSignature]], [[audioKeysOf]]). */
+    * array — the ONE exact-audio-identity definition ([[audioKeysOf]]),
+    * the audio analogue of [[rasterSignature]]: container-level byte
+    * differences that decode to the same PCM hash equal. */
   private def pcmMd5(s: Array[Int]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val buf = new Array[Byte](2 * s.length)
@@ -1231,17 +1224,6 @@ object Multimodal {
     }
     md.update(buf)
     md.digest().map("%02x".format(_)).mkString
-  }
-
-  def audioSignature(media: Dataset[MediaRow]): Dataset[AudioSig] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.filter(_.kind == "audio").flatMap { m =>
-        val s = pcmSamples(m.content)
-        if (s.isEmpty) Nil
-        else Seq(AudioSig(m.mediaId, s.length, pcmMd5(s)))
-      }
-    }
   }
 
   /** BOTH audio-manifest keys off ONE decode: the exact PCM signature

@@ -31,12 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Opt-in per-round trace (env var so forked ScaleCheck children
-    * inherit it): the scale sweeps record CONVERGENCE ROUNDS as
-    * first-class evidence — near-dup blobs should stay diameter 2-4
-    * however many copies the corpus gains. */
-  private val logRounds = sys.env.contains("GRAFT_CC_LOG")
-
   /** Label every node in `nodes(nodeCol)` with the min node id of its
     * component under undirected `edges(srcCol, dstCol)`. Returns
     * (`nodeCol` → "id", "label"). Node ids must be non-null; edges may
@@ -82,7 +76,6 @@ object ConnectedComponents {
           least(col("label"), col("nmin")).as("next"))
         .localCheckpoint()
       changed = staged.filter(col("next") < col("label")).count()
-      if (logRounds) println(s"[cc] round=$round changed=$changed")
       labels = staged.select(col("id"), col("next").as("label"))
       // bound CHANGE rounds only: up to maxRounds rounds may report
       // changes, and a run converging in exactly maxRounds still gets
@@ -173,7 +166,6 @@ object ConnectedComponents {
         .localCheckpoint()
       val changed = next.unionAll(l).groupBy("u", "v").count()
         .filter(col("count") === 1).limit(1).count()
-      if (logRounds) println(s"[cc] star round=$round changed=$changed")
       done = changed == 0
       require(done || round <= maxRounds,
         s"star contraction did not converge in $maxRounds rounds")

@@ -14,14 +14,12 @@ import graft.sources.DocumentIngest
   * printers are untouched (their printerInfo stays null if it was
   * null: `ensure_printer_info` only runs on selected records).
   *
-  * Scale: one equi-join keyed by device IP. The printers side keys on
-  * the computed `__ip`, so it gets its own hash Exchange. The results
-  * side (from a poll, an `ExistingRDD` scan with no known partitioning)
-  * is hashed by IP once, by `SnmpPayload.cartridges`' `groupBy(ip)`,
-  * and [[onePerIp]] rides that partitioning. The initial plan is a
-  * sort-merge join; once AQE has the results stage's size, a
-  * fleet-sized results side is broadcast and the printers' shuffle is
-  * read locally. */
+  * Scale: one equi-join keyed by device IP. The results side (the
+  * poll's `mapPartitions` inside the same plan) is hashed by IP once,
+  * by `SnmpPayload.cartridges`' `groupBy(ip)`, and [[onePerIp]] rides
+  * that partitioning. A fleet-sized results side has size statistics
+  * below the broadcast threshold, so the join plans as a broadcast from
+  * the start and the printers are never shuffled. */
 object ScanMerge {
 
   /** printerInfo widened to the canonical fields: a register fresh from
@@ -40,14 +38,14 @@ object ScanMerge {
     * Spark keeps no append order across a results frame, so the
     * reference's "last appended wins" is not reconstructable: the pick
     * is the min over the value struct — deterministic but
-    * value-lexicographic. Cost note: the dedup hashes
-    * on the SAME key the merge join shuffles the results by, so it rides
-    * that exchange (one extra partial-combining aggregate, no extra
-    * shuffle). */
+    * value-lexicographic. Cost note: the dedup hashes on the same key
+    * as the results' upstream `groupBy(ip)`, so it rides that exchange;
+    * `array_min(collect_list(...))` plans as one hash aggregate, where
+    * `min` over a struct holding an array needs a sort. */
   private def onePerIp(r: DataFrame): DataFrame = {
     val valueCols = r.columns.filterNot(_ == "scan_ip")
     r.groupBy("scan_ip")
-      .agg(min(struct(valueCols.map(col): _*)).as("__v"))
+      .agg(array_min(collect_list(struct(valueCols.map(col): _*))).as("__v"))
       .select(col("scan_ip") +: valueCols.map(c => col(s"__v.`$c`").as(c)): _*)
   }
 

@@ -159,10 +159,12 @@ object Pipeline {
     * block fails the next read instead of silently re-running the stage
     * (as an evicted cache would, polling the devices again). The blocks
     * are not released here: `RunSummary.out` and the frames handed to
-    * `checkpoint` read them, so the caller ([[Refresh]]) unpersists them.
+    * `checkpoint` read them, so the caller ([[Refresh]]) releases the
+    * frames handed to `checkpoint` (every materialized output).
     * `checkpoint` is called after each successful stage with that
-    * stage's materialized output. Every Spark job a stage runs (its plan
-    * build's and its checkpoint's) carries the job description
+    * stage's materialized output. Every Spark job a stage runs (its
+    * checkpoint's, and any an eager call runs while the stage builds
+    * its plan) carries the job description
     * `step:substep`; the caller's description is restored after the
     * stage, so the `checkpoint` callback's jobs keep it. */
   def run(input: DataFrame, stages: Seq[Stage],

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Enrich, FleetSnapshot, ScanMerge}
+import graft.queries.Clustering
 import graft.sources.{DeviceClient, DevicePoll, DocumentIngest, SideTables, SnmpPayload}
 
 /** The fleet refresh, the reference's `python -m cli.main` (SURVEY.md
@@ -20,9 +21,10 @@ object Refresh {
     * printers at a valid IP whose `lower(trim(Type))` is in `models` (a
     * plugin's TARGET_TYPES, core/printers.py:38-40). The document is
     * written from the last group stage's output, the sheet from step 4's
-    * (unwritten if step 4 did not run). The blocks the run pinned (every
-    * RDD persisted during the call) are released after the writes, and
-    * `out` lazily reads the written sheet, else the document. */
+    * (unwritten if step 4 did not run). The stage outputs `Pipeline.run`
+    * materialized are released after the writes (blocks other threads
+    * pinned are left alone), and `out` lazily reads the written sheet,
+    * else the document. */
   def apply(docIn: String, docOut: String, sheetOut: String,
       employees: DataFrame, locations: DataFrame, sheet: DataFrame,
       client: DeviceClient, models: Set[String], excludes: Seq[String] = Nil): RunSummary = {
@@ -47,11 +49,14 @@ object Refresh {
     val (plan, planWarnings) = Pipeline.numberedPlan(None, groups, Some(toSheet))
     val (exSteps, exSubs, invalid) = Pipeline.parseExcludes(excludes)
 
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val pinned = Seq.newBuilder[DataFrame]
     try {
       var document = DocumentIngest.printers(DocumentIngest.readDocument(spark, docIn))
       val summary = Pipeline.run(document, Pipeline.pruneNumbered(plan, exSteps, exSubs),
-        (name, df) => if (!name.startsWith(toSheet.step)) document = df)
+        { (name, df) =>
+          pinned += df
+          if (!name.startsWith(toSheet.step)) document = df
+        })
       DocumentIngest.writeDocument(document, docOut)
       val out = if (summary.results.exists(r => r.step == toSheet.step && r.ok)) {
         summary.out.write.mode("overwrite").parquet(sheetOut)
@@ -59,8 +64,6 @@ object Refresh {
       } else DocumentIngest.printers(DocumentIngest.readDocument(spark, docOut))
       summary.copy(out = out, warnings =
         planWarnings ++ invalid.map(t => s"Ignoring invalid --exclude value: $t"))
-    } finally spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!before.contains(id)) rdd.unpersist(blocking = true)
-    }
+    } finally pinned.result().foreach(Clustering.release)
   }
 }

@@ -1535,7 +1535,7 @@ object MultimodalQueries {
     * — audio's dominant exact-dup reality is the same file re-crawled;
     * the image manifest's two-encoder raster twins are the
     * image-specific variant of the same tier). Tiers: (1) exact PCM
-    * dedup via [[Multimodal.audioSignature]] (decode-level, so a
+    * dedup via [[Multimodal.audioKeysOf]]'s PCM md5 (decode-level, so a
     * container-byte variant would also collapse), lowest-id keeper;
     * (2) m18's hamming clusters over the KEEPERS only; (3) per-clip
     * verdict with the keeper's cluster. Oracle: m20's k-arithmetic
@@ -1546,8 +1546,8 @@ object MultimodalQueries {
     * one-decode [[Multimodal.audioManifestKeys]] projection — the SAME
     * two definitions the streaming door persists and finalizes
     * (VERDICT r16 item 6; StreamingAudioManifestSpec pins the
-    * row-for-row parity), and one decode pass where the original
-    * composed audioSignature + audioHash paid two. */
+    * row-for-row parity), and one decode pass per clip for both
+    * keys. */
   val m26AudioManifest: QuerySpec = QuerySpec.sql(
     "m26_audio_manifest",
     """WITH m AS (

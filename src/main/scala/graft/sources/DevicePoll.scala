@@ -2,7 +2,7 @@ package graft.sources
 
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -11,8 +11,9 @@ import org.apache.spark.sql.types._
   * The reference polls each printer sequentially over SNMP/HTTP
   * (plugins/tonerFinder/toner_hp.py:75-93 — one device at a time,
   * worst case timeout×retries ≈ 60 s per offline device,
-  * adapters/snmp_client.py:11-12). Here the fan-out is a
-  * `mapPartitions` over the device table with one poller per task slot
+  * adapters/snmp_client.py:11-12). Here the fan-out is a Dataset
+  * `mapPartitions` over the device table, inside the caller's Catalyst
+  * plan (it runs with the caller's action), with one poller per task slot
   * (a slot runs one task at a time, so more partitions than slots add
   * tasks, not concurrent pollers); per-device failure degrades to zero
   * rows (the reference's try/except→offline default,
@@ -50,21 +51,22 @@ object DevicePoll {
     * slot. Input: any DataFrame with a string `ip` column
     * (deduplicated — one poll per device even if upstream has repeats).
     * One shuffle hashes every copy of an IP into the same poller, which
-    * then polls each distinct IP of its partition once. */
+    * then polls each distinct IP of its partition once. The fan-out is
+    * a Dataset `mapPartitions`, so it stays inside the caller's plan:
+    * nothing runs until an action, and two walks over the same devices
+    * share one IP shuffle. */
   def walk(spark: SparkSession, devices: DataFrame, baseOid: String,
-      client: DeviceClient): DataFrame = {
-    val ips = devices.select("ip")
+      client: DeviceClient): DataFrame =
+    devices.select("ip")
       .repartition(spark.sparkContext.defaultParallelism, col("ip"))
-    val rows = ips.rdd.mapPartitions { it =>
-      it.map(_.getString(0)).distinct.flatMap { ip =>
-        Try(client.walk(ip, baseOid)) match {
-          case Success(rows) => rows.iterator.map { case (o, v) => Row(ip, o, v) }
-          case Failure(_)    => Iterator.empty // degrade, don't abort
+      .mapPartitions { it =>
+        it.map(_.getString(0)).distinct.flatMap { ip =>
+          Try(client.walk(ip, baseOid)) match {
+            case Success(rows) => rows.iterator.map { case (o, v) => Row(ip, o, v) }
+            case Failure(_)    => Iterator.empty // degrade, don't abort
+          }
         }
-      }
-    }
-    spark.createDataFrame(rows, WalkSchema)
-  }
+      }(Encoders.row(WalkSchema))
 }
 
 /** Deterministic SNMP supplies+colorant fixture generator. Emulates the

@@ -169,27 +169,67 @@ class ScanMergeSpec extends SparkSpec {
     assert(snmp(("Branches_Grouped", 0L)) == Some(List("S1")))
   }
 
+  /** An appended retry row for the same device: the reference calls
+    * each device once (dict semantics). */
+  private def duplicateResults = Seq(
+    ("10.0.1.7", "online", Seq(("Black", "41%"))),
+    ("10.0.1.7", "retry-won", Seq(("Black", "40%"), ("Cyan", "9%"))))
+    .toDF("ip", "status", "carts")
+    .select(col("ip"), col("status"),
+      expr("transform(carts, c -> named_struct('cartridge', c._1, 'remaining_percent', c._2))")
+        .as("cartridges"))
+
+  private def hpSelected = lower(trim(coalesce(col("Type"), lit(""))))
+    .isin("m404dn", "m426fdw") &&
+    DocumentIngest.ipOf(printers).isNotNull &&
+    !lower(DocumentIngest.ipOf(printers)).isin(DocumentIngest.BadIps: _*)
+
   test("duplicate scan-result IPs never fan out the fleet") {
-    // an appended retry row for the same device: the reference calls
-    // each device once (dict semantics) — the merge must keep one row
-    // per ip and one output row per printer
-    val results = Seq(
-      ("10.0.1.7", "online", Seq(("Black", "41%"))),
-      ("10.0.1.7", "retry-won", Seq(("Black", "40%"), ("Cyan", "9%"))))
-      .toDF("ip", "status", "carts")
-      .select(col("ip"), col("status"),
-        expr("transform(carts, c -> named_struct('cartridge', c._1, 'remaining_percent', c._2))")
-          .as("cartridges"))
-    val selected = lower(trim(coalesce(col("Type"), lit(""))))
-      .isin("m404dn", "m426fdw") &&
-      DocumentIngest.ipOf(printers).isNotNull &&
-      !lower(DocumentIngest.ipOf(printers)).isin(DocumentIngest.BadIps: _*)
-    val out = ScanMerge(printers, results, selected)
+    // the merge must keep one row per ip and one output row per printer
+    val out = ScanMerge(printers, duplicateResults, hpSelected)
     assert(out.count() == printers.count()) // no duplication
     // deterministic pick (min over the value struct): "online" < "retry-won"
     val hit = out.filter(col("group") === "Company_Grouped" && col("row_idx") === 0)
       .select(col("printerInfo.status")).collect().head.getString(0)
     assert(hit == "online")
+  }
+
+  private val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  test("the scan-stage merge plans as a broadcast from the start: the printers are never shuffled") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, SortMergeJoinExec}
+    import graft.sources.{DeterministicSnmpFake, DevicePoll, SnmpPayload}
+    // the refresh's tonerFinder stage: a materialized register, both
+    // walks of its selected devices, cartridges, then the merge
+    val pc = printers.localCheckpoint()
+    val selected = lower(trim(coalesce(col("Type"), lit(""))))
+      .isin("m404dn", "m426fdw") && DocumentIngest.hasValidIp(pc)
+    val devs = pc.where(selected).withColumn("ip", DocumentIngest.ipOf(pc))
+    val client = new DeterministicSnmpFake(failEvery = 0)
+    val walk = DevicePoll.walk(spark, devs, SnmpPayload.SuppliesBase, client)
+      .unionByName(DevicePoll.walk(spark, devs, SnmpPayload.ColorantBase, client))
+    val out = ScanMerge(pc, SnmpPayload.cartridges(walk).withColumn("status", lit("online")),
+      selected)
+    assert(out.collect().length == printers.count())
+    assert(out.queryExecution.sparkPlan.collect { case j: SortMergeJoinExec => j }.isEmpty)
+    val joins = helper.collect(out.queryExecution.executedPlan) { case j: BaseJoinExec => j }
+    assert(joins.length == 1 && joins.head.isInstanceOf[BroadcastHashJoinExec])
+    assert(helper.collect(joins.head.left) { case e: Exchange => e }.isEmpty)
+  }
+
+  test("one row per scan IP in one hash aggregate: no Sort, no SortAggregate on the results side") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    val out = ScanMerge(printers, duplicateResults, hpSelected)
+    assert(out.count() == printers.count())
+    val joins = helper.collect(out.queryExecution.executedPlan) { case j: BaseJoinExec => j }
+    assert(joins.length == 1 && joins.head.isInstanceOf[BroadcastHashJoinExec])
+    val results = joins.head.right
+    assert(helper.collect(results) { case s: SortExec => s }.isEmpty)
+    assert(helper.collect(results) { case a: SortAggregateExec => a }.isEmpty)
+    assert(helper.collect(results) { case a: ObjectHashAggregateExec => a }.nonEmpty)
   }
 
   test("alerts merge: printerError family defaults to {Offline, critical}") {

@@ -128,6 +128,26 @@ class RefreshSpec extends SparkSpec {
       sheetRows(in.resolveSibling("sheet.parquet")))
   }
 
+  test("a refresh leaves alone the blocks another thread pinned while it ran") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val in = fixtureCopy()
+    val running = Future(refresh(new GatedSnmpClient, in, in.resolveSibling("out.json"),
+      in.resolveSibling("sheet.parquet")))(ExecutionContext.global)
+    val pinned = try {
+      assert(GatedSnmpClient.entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      val df = spark.range(100).toDF("id").localCheckpoint()
+      assert(df.count() == 100)
+      df
+    } finally GatedSnmpClient.gate.countDown()
+    Await.result(running, 120.seconds)
+    val rdd = pinned.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+    assert(spark.sparkContext.getPersistentRDDs.contains(rdd.id))
+    assert(pinned.count() == 100)
+  }
+
   test("excluding step 3 skips the scan: no device is polled and every printerInfo stays as read") {
     val in = fixtureCopy()
     CountingSnmpClient.polls.reset()
@@ -175,6 +195,26 @@ class RefreshSpec extends SparkSpec {
     assert(now(("Branches_Grouped", "0")) == was(("Branches_Grouped", "0")))
     assert(now(("Company_Grouped", "2")) != was(("Company_Grouped", "2")))
   }
+}
+
+/** [[DeterministicSnmpFake]] whose walks of [[GatedSnmpClient.Ip]] wait
+  * until the test opens the gate; the latches are JVM-wide because
+  * local-mode tasks run in the test JVM. */
+final class GatedSnmpClient extends DeviceClient {
+  private val fake = new DeterministicSnmpFake(failEvery = 0)
+  override def walk(ip: String, baseOid: String): Seq[(String, String)] = {
+    if (ip == GatedSnmpClient.Ip) {
+      GatedSnmpClient.entered.countDown()
+      GatedSnmpClient.gate.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    fake.walk(ip, baseOid)
+  }
+}
+
+object GatedSnmpClient {
+  val Ip = "10.0.1.7"
+  val entered = new java.util.concurrent.CountDownLatch(1)
+  val gate = new java.util.concurrent.CountDownLatch(1)
 }
 
 /** A device whose toner levels move between any two walks. */

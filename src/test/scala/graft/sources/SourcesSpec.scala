@@ -1,7 +1,12 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.SparkSpec
 import graft.ops.FleetSnapshot
@@ -208,8 +213,12 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("cartridges over a two-walk union: one Exchange, no Join, one poll per device and OID") {
-    import org.apache.spark.sql.execution.RDDScanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
+    // the one Exchange is above the polls (cartridges' groupBy(ip)); under
+    // them both walks read one IP shuffle, the second as a ReusedExchange
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     val devices = Seq("10.0.0.1", "10.0.0.2", "10.0.0.3").toDF("ip")
     val client = new CountingSnmpClient
@@ -221,9 +230,51 @@ class SourcesSpec extends SparkSpec {
     assert(CountingSnmpClient.polls.sum() == 6)
     val plan = carts.queryExecution.executedPlan
     val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    assert(helper.collect(plan) { case e: Exchange => e }.length == 1)
     assert(helper.collect(plan) { case j: BaseJoinExec => j }.isEmpty)
-    assert(helper.collect(plan) { case s: RDDScanExec => s }.length == 2)
+    val polls = helper.collect(plan) { case m: MapPartitionsExec => m }
+    assert(polls.length == 2)
+    // under the polls: the IP shuffle runs once, the second walk reuses it
+    val under = polls.flatMap(p => helper.collect(p) { case e: ShuffleExchangeExec => e })
+    assert(under.length == 1)
+    assert(under.head.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), _) => a.name == "ip"
+      case _ => false
+    })
+    assert(polls.flatMap(p => helper.collect(p) { case r: ReusedExchangeExec => r }).length == 1)
+    // above the polls: cartridges' groupBy(ip) only
+    val above = helper.collect(plan) { case e: Exchange => e }.filterNot(e => under.exists(_ eq e))
+    assert(above.length == 1)
+  }
+
+  test("S5: building a walk runs no Spark job; the action polls") {
+    val key = "spark.job.description"
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descs.add(String.valueOf(e.properties.getProperty(key)))
+    }
+    val sc = spark.sparkContext
+    // the listener sees jobs in order: seeing "done" means it saw all before
+    def marker(desc: String): Unit = { sc.setJobDescription(desc); spark.range(1).count() }
+    val devices = Seq("10.0.0.1", "10.0.0.2", "10.0.0.3").toDF("ip")
+    CountingSnmpClient.polls.reset()
+    sc.addSparkListener(listener)
+    val walk = try {
+      marker("begin")
+      sc.setJobDescription("walk")
+      val w = DevicePoll.walk(spark, devices, S, new CountingSnmpClient)
+        .union(DevicePoll.walk(spark, devices, C, new CountingSnmpClient))
+      marker("done")
+      eventually(timeout(30.seconds))(assert(descs.contains("done")))
+      w
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setJobDescription(null)
+    }
+    assert(!descs.asScala.exists(_ == "walk"))
+    assert(CountingSnmpClient.polls.sum() == 0)
+    assert(walk.select("ip").distinct().count() == 3)
+    assert(CountingSnmpClient.polls.sum() == 6)
   }
 
   test("FleetSnapshot: flatten + first-wins colors + raw nulls") {
